@@ -89,10 +89,16 @@ object Bench {
       val r = benched.map { case (name, fn) =>
         // a failing pass must not contribute its time-to-failure as a
         // "fast" sample — record it as +inf so min() only ever picks
-        // successful runs; all-failed surfaces as -1 in the JSON
+        // successful runs; all-failed surfaces as -1 in the JSON. Each
+        // query runs as its own job group, which is how the staging
+        // registry learns which queries consume a staging.
+        spark.sparkContext.setJobGroup(name, name)
         val t0 = System.nanoTime()
         val ok = try { run(fn, sfDir); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed in pass $p: $e")
+            false
+          } finally spark.sparkContext.clearJobGroup()
         name -> (if (ok) secsSince(t0) else Double.PositiveInfinity)
       }
       val slow = r.toSeq.sortBy(-_._2).take(5)
@@ -270,16 +276,15 @@ object Bench {
     root.put("sf", sfDir)
     root.put("fingerprint", fp)
     // ADVICE r14: per-query floor entries for queries reading a
-    // SHARED in-session staged derivation time only their policy tail
-    // — the derivation lands in whichever consumer runs first (the
-    // warm-up pass in practice). Mark them so a floor reader knows
-    // those rows are not independently interpretable.
-    root.put("staging_note", "listed queries share memoized staged " +
-      "derivations paid once per session by their first consumer; " +
-      "per-query entries time the policy tail only (BASELINE.md " +
-      "staged-bands convention)")
+    // SHARED in-session staging time only their policy tail — the
+    // build lands in whichever consumer runs first. The registry
+    // recorded which queries (job groups) those are.
+    root.put("staging_note", "listed queries read stagings paid once " +
+      "per session by their first consumer; per-query entries time " +
+      "the policy tail only (BASELINE.md staging-registry rule)")
     val sNode = root.putArray("staging_dependent")
-    SparkEntry.stagingDependentQueries.foreach(sNode.add)
+    Staged.consumers.filter(results.contains).toSeq.sorted
+      .foreach(sNode.add)
     val qNode = root.putObject("queries")
     merged.toSeq.sortBy(_._1).foreach { case (k, v) => qNode.put(k, v) }
     if (floorPath.getParent != null)

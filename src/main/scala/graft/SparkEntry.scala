@@ -96,18 +96,11 @@ object SparkEntry {
     * for the same 1.2M pairs (measured ~2× the wall-clock at sf0.1).
     * ONE definition on each side (SQL twin in [[coPurchaseEdgesSql]]).
     */
-  private val coPurchaseEdgesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  // Memoized WITH checkpoint (VERDICT r13 task 3 — the
-  // [[nearDupPairsShared]] convention, but materialized): the r13
-  // small-graph arms made the triangle/k-core kernels ~free, so the
-  // edge derivation (per-order fold + support-2 aggregate) became the
-  // dominant cost of BOTH q_triangles and q_kcore — and it is the
-  // SAME canonical edge set. One derivation per (session, dir); both
-  // queries read the checkpointed |E|-row id table. Evicted with the
-  // session like every memo here.
+  // Staged and checkpointed (VERDICT r13 task 3): the edge derivation
+  // is the dominant cost of BOTH q_triangles and q_kcore, and the SAME
+  // canonical edge set.
   private def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    memoized(coPurchaseEdgesMemo, s, dir) {
+    Staged(s, "co_purchase_edges", dir) {
       val li = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_partkey"))
       val pairs = li.groupBy(col("l_orderkey"))
@@ -121,37 +114,9 @@ object SparkEntry {
       pairs.groupBy(col("u"), col("v"))
         .agg(count(lit(1)).as("s"))
         .filter(col("s") >= 2).select(col("u"), col("v"))
+        .localCheckpoint(true)
     }
 
-  /** Bench queries whose per-query timing depends on shared staging
-    * order (ADVICE r14, completed per ADVICE r15): every consumer of
-    * a memoized+CHECKPOINTED per-(session, dir) derivation
-    * ([[coPurchaseEdges]], [[orderSupplierEdges]], [[theilSenStaged]],
-    * [[repeatedSpansShared]], [[gramShared]] / [[pcaWeightsShared]],
-    * [[bm25IndexShared]]) — the staging cost lands on whichever
-    * consumer runs first, so none of these rows is independently
-    * interpretable. [[nearDupPairsShared]] consumers are INCLUDED even
-    * though that memo is checkpoint = false: the value it holds is
-    * [[operators.Dedup.minhashNearDupPairs]]'s output, which is
-    * already an eager localCheckpoint — the memo is pure reuse of
-    * materialized data, so its consumers time only their policy tail
-    * (the r15 "re-executes per consumer" exclusion rationale was
-    * wrong). Written into the floor artifact so its per-query rows
-    * carry the caveat machine-readably.
-    */
-  private[graft] val stagingDependentQueries: Seq[String] = Seq(
-    "q_triangles", "q_kcore", "q_triangles_dist", "q_kcore_dist",
-    "q_pagerank", "q_personalized_pagerank",
-    "q_pagerank_dist", "q_personalized_pagerank_dist",
-    "q_theil_sen", "q_theil_sen_sampled",
-    "q_repeated_spans", "q_substring_dedup", "q_dup_text_fraction",
-    "q_gram_matrix", "q_pca_power", "q_pca_project", "q_pca_whiten",
-    "q_bm25_topk", "q_bm25_pruned",
-    "q_minhash_pairs", "q_minhash_dedup", "q_minhash_dedup_cc",
-    "q_minhash_dedup_cc_dist", "q_dup_clusters", "q_dup_representatives")
-
-  private val orderSupplierEdgesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   /** The order/supplier bipartite graph on LONG node ids
     * (orderkey*2 / suppkey*2+1) shared by the PageRank queries and
     * their forced-distributed verify twins: rank values are
@@ -160,24 +125,25 @@ object SparkEntry {
     * 6.4s -> 5.0s solo-bench). The 'O…'/'S…' labels attach only on
     * the final |nodes|-row result ([[labelRankNodes]]).
     *
-    * Memoized + checkpointed (VERDICT r14 task 1 — the
+    * Staged + checkpointed (VERDICT r14 task 1 — the
     * [[coPurchaseEdges]] convention): `q_pagerank`,
     * `q_personalized_pagerank`, and both `_dist` verify twins each
     * consumed the SAME 1.2M-edge distinct+union derivation from
     * lineitem — the two heaviest graph rows on the r14 floor
     * (2.15 + 2.28 s) re-paid it per query. One derivation per
     * (session, dir); every consumer reads the checkpointed |E|-row
-    * long-id table. Evicted with the session like every memo here.
+    * long-id table.
     */
   private def orderSupplierEdges(s: SparkSession, dir: String)
       : DataFrame =
-    memoized(orderSupplierEdgesMemo, s, dir) {
+    Staged(s, "order_supplier_edges", dir) {
       val pairs = Tables.lineitem(s, dir)
         .select((col("l_orderkey").cast("long") * 2).as("o"),
           (col("l_suppkey").cast("long") * 2 + 1).as("p"))
         .distinct()
       pairs.select(col("o").as("src"), col("p").as("dst"))
         .union(pairs.select(col("p").as("src"), col("o").as("dst")))
+        .localCheckpoint(true)
     }
 
   private def labelRankNodes(ranked: DataFrame): DataFrame =
@@ -249,93 +215,36 @@ object SparkEntry {
     * materializes each curation stage per corpus version, and v3
     * refining v2's survivors must not re-run the whole v2 plan.
     */
-  private val curationV2Memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def curationV2Shared(s: SparkSession, dir: String): DataFrame =
-    memoized(curationV2Memo, s, dir)(curationV2(s, dir))
+    Staged(s, "curation_v2", dir)(curationV2(s, dir).localCheckpoint(true))
 
   /** The embedding gram matrix and its derived PCA direction, staged
     * once per (session, dir): four queries (gram, power, project,
     * whiten) share one Θ(dim²)-per-row pass — the "build the second-
     * moment artifact once per corpus version" production shape.
     */
-  private val gramMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def gramShared(s: SparkSession, dir: String): DataFrame =
-    memoized(gramMemo, s, dir)(
-      Similarity.gramMatrix(Tables.embeddings(s, dir), "embedding", 64))
+    Staged(s, "gram", dir)(
+      Similarity.gramMatrix(Tables.embeddings(s, dir), "embedding", 64)
+        .localCheckpoint(true))
   /** The BM25 index staged once per (session, dir): the exact and
     * df-pruned retrieval queries share one postings/df/length build —
     * index once, serve many (the production split; see
     * [[operators.TextOps.Bm25Index]]).
     */
-  private val bm25Memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), TextOps.Bm25Index]()
   private def bm25IndexShared(s: SparkSession,
-      dir: String): TextOps.Bm25Index = {
-    val key = (s, dir)
-    val hit = bm25Memo.get(key)
-    if (hit != null) return hit
-    bm25Memo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val raw = TextOps.bm25Index(Tables.documents(s, dir), "doc_id", "text")
-    val built = TextOps.Bm25Index(raw.postings.localCheckpoint(true),
-      raw.docLen.localCheckpoint(true),
-      raw.docFreq.localCheckpoint(true),
-      raw.stats.localCheckpoint(true))
-    bm25Memo.putIfAbsent(key, built)
-    bm25Memo.get(key)
-  }
+      dir: String): TextOps.Bm25Index =
+    Staged(s, "bm25_index", dir) {
+      val raw = TextOps.bm25Index(Tables.documents(s, dir), "doc_id", "text")
+      TextOps.Bm25Index(raw.postings.localCheckpoint(true),
+        raw.docLen.localCheckpoint(true),
+        raw.docFreq.localCheckpoint(true),
+        raw.stats.localCheckpoint(true))
+    }
 
-  private val pcaWeightsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Double]]()
-  private def pcaWeightsShared(s: SparkSession, dir: String): Array[Double] = {
-    val key = (s, dir)
-    val hit = pcaWeightsMemo.get(key)
-    if (hit != null) return hit
-    pcaWeightsMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val w = Similarity.pcaTopComponentFromGram(gramShared(s, dir), 64,
-      steps = 3)
-    pcaWeightsMemo.putIfAbsent(key, w)
-    pcaWeightsMemo.get(key)
-  }
-
-  /** Shared memo shape for staged per-(session, dir) artifacts:
-    * build + eager localCheckpoint OUTSIDE any map lock (the
-    * Tables.memoRead convention — computeIfAbsent would hold the CHM
-    * bin lock across a whole Spark job, serializing unrelated keys
-    * that share the bin; two racing builders cost one duplicate job,
-    * putIfAbsent keeps the memo single-valued), with dead-session
-    * eviction on the miss path only.
-    */
-  private def memoized(
-      memo: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame],
-      s: SparkSession, dir: String, checkpoint: Boolean = true)(
-      build: => DataFrame): DataFrame = {
-    val key = (s, dir)
-    val hit = memo.get(key)
-    if (hit != null) return hit
-    memo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val built = if (checkpoint) build.localCheckpoint(true) else build
-    val prev = memo.putIfAbsent(key, built)
-    if (prev != null) {
-      if (checkpoint) unpersistCheckpointed(built)
-      prev
-    } else built
-  }
-
-  /** Release a localCheckpoint'd frame's blocks — the putIfAbsent
-    * LOSER's copy would otherwise linger for the session's lifetime
-    * (the winner's serves). NOT `df.rdd.unpersist`: Dataset.rdd
-    * derives a NEW wrapper RDD (never persisted); the blocks live on
-    * the LogicalRDD the checkpointed Dataset wraps. Shared by
-    * [[memoized]] and the pair-valued [[theilSenStaged]] memo
-    * (ADVICE r14: the bare putIfAbsent there leaked the loser's two
-    * checkpointed RDDs).
-    */
-  private def unpersistCheckpointed(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(false))
+  private def pcaWeightsShared(s: SparkSession, dir: String): Array[Double] =
+    Staged(s, "pca_weights", dir)(
+      Similarity.pcaTopComponentFromGram(gramShared(s, dir), 64, steps = 3))
 
   private def curationV2(s: SparkSession, dir: String): DataFrame = {
     val corpus = Tables.documents(s, dir).select(col("doc_id"),
@@ -481,14 +390,13 @@ object SparkEntry {
     * `q_substring_dedup` — the corpus-wide window pass is the
     * expensive step, and production stages its output per corpus
     * version exactly like the minhash pair table
-    * ([[nearDupPairsShared]]). Eager localCheckpoint = the memo holds
-    * materialized data, not a plan to re-execute per consumer.
+    * ([[nearDupPairsShared]]). Eager localCheckpoint = the staging
+    * holds materialized data, not a plan to re-execute per consumer.
     */
-  private val spanMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def repeatedSpansShared(s: SparkSession, dir: String): DataFrame =
-    memoized(spanMemo, s, dir)(
-      Dedup.repeatedSpans(substrCorpus(s, dir), "doc_id", "text", k = 8))
+    Staged(s, "repeated_spans", dir)(
+      Dedup.repeatedSpans(substrCorpus(s, dir), "doc_id", "text", k = 8)
+        .localCheckpoint(true))
 
   /** The full §3.1 metrics ETL in one plan (the flagship pipeline
     * query, `q_metrics_etl` at the reference's 25-host fan-out):
@@ -559,37 +467,11 @@ object SparkEntry {
       .select(col("host_name"), col("r.service_name"), col("r.body"))
   }
 
-  /** The committed §3.1 cron-tick job end to end (VERDICT r9 task 7):
-    * land the synthetic response documents as the job's JSON input
-    * (staged once per (JVM, dir, hosts) — corpus prep, not job time),
-    * then run ONE fresh AvailableNow tick — stream read → flatten →
-    * melt → bounded-window dedup → (family, load_date)-partitioned
-    * append — into brand-new out/checkpoint dirs, so every call
-    * measures a full first tick, never a checkpoint no-op. Returns
-    * the landed sink frame (the bench's noop write re-scans it; the
-    * scan is trivial next to the tick itself). The PREVIOUS call's
-    * work dir is deleted on entry — a multi-call bench/probe JVM
-    * holds at most one finished tick's output on disk, not one per
-    * pass (the frame returned from the previous call must already
-    * have been consumed by then, which is the bench contract).
-    */
-  private val lastTickDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  def etlJobTick(s: SparkSession, dir: String, hosts: Int): DataFrame = {
-    Option(lastTickDir.getAndSet(null)).foreach { prev =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(prev))
-    }
-    val src = new java.io.File(s"$dir/events.parquet")
-    val tag = Tables.dirTag(
-      s"$dir|${src.length()}|${src.lastModified()}|$hosts")
-    val inDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_etljob_in_$tag").getAbsolutePath
-    if (!new java.io.File(inDir, "_SUCCESS").exists()) {
+  /** The cron-tick job's input: the synthetic response documents,
+    * staged as JSON (corpus prep, not job time). */
+  private[graft] def etlJobInput(s: SparkSession, dir: String,
+      hosts: Int): String =
+    Staged.onDisk(s, s"etljob_in_$hosts", dir) { inDir =>
       val ev = Tables.events(s, dir).select(
         col("event_id"),
         concat(lit("host"), (col("user_id") % hosts).cast("string"))
@@ -597,9 +479,19 @@ object SparkEntry {
         unix_timestamp(col("ts")).as("epoch"))
       syntheticResponses(ev).write.mode("overwrite").json(inDir)
     }
-    val base = java.nio.file.Files.createTempDirectory("graft_etljob")
-      .toString
-    lastTickDir.set(base)
+
+  /** The committed §3.1 cron-tick job end to end (VERDICT r9 task 7):
+    * ONE AvailableNow tick over [[etlJobInput]] — stream read →
+    * flatten → melt → bounded-window dedup → (family,
+    * load_date)-partitioned append — into out/checkpoint dirs under the
+    * session's staging root, emptied first, so every call measures a
+    * full first tick and the previous call's output (already consumed,
+    * the bench contract) does not pile up. Returns the landed sink.
+    */
+  def etlJobTick(s: SparkSession, dir: String, hosts: Int): DataFrame = {
+    val inDir = etlJobInput(s, dir, hosts)
+    val base = new java.io.File(Staged.root(s), "etljob_tick")
+    org.apache.commons.io.FileUtils.deleteQuietly(base)
     jobs.NagiosEtlJob.runOnce(s, inDir, s"$base/out", s"$base/ckpt",
       Seq("CPU Usage", "Swap Usage"))
     s.read.parquet(s"$base/out/data")
@@ -630,12 +522,10 @@ object SparkEntry {
     * centroid collect + assignment scan + cluster pair join is paid
     * once and both the audit and the survivor queries read it.
     */
-  private val semdedupPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def semdedupPairsShared(s: SparkSession, dir: String): DataFrame =
-    memoized(semdedupPairsMemo, s, dir)(
+    Staged(s, "semdedup_pairs", dir)(
       Dedup.semanticNearDupPairs(Tables.embeddings(s, dir), "vec_id",
-        "embedding", threshold = 0.2, nlist = 8))
+        "embedding", threshold = 0.2, nlist = 8).localCheckpoint(true))
 
   /** Shared CTE chain for the SemDeDup oracles: embeddings as
     * DOUBLE[], the 8 lowest-id vectors as the centroid seed (cid =
@@ -765,24 +655,11 @@ object SparkEntry {
       | WHERE c.vec_id <> q.vec_id) t
       |WHERE rank <= 10""".stripMargin
 
-  /** Staged minhash band keys for the history corpus, written ONCE per
-    * source-data version and served from parquet on every later call —
-    * the 100 TB operating mode, where re-ingest probes staged buckets
-    * instead of re-hashing the corpus. The bench's min-of-3 therefore
-    * measures the steady-state probe, with the one-time staging cost
-    * amortized away exactly as in production.
-    *
-    * The staging key covers the source file's identity AND version
-    * (length + mtime): regenerated data in the same dir must invalidate
-    * the staging, or the probe would silently join buckets hashed from
-    * a stale corpus — the exact failure the incremental drift guard
-    * exists to prevent.
-    */
   /** Verified near-dup pairs of [[nearDupCorpus]] under the family's
     * shared scheme (k=5 shingles, 64 hashes, 32 bands, τ=0.5), computed
     * ONCE per (session, dir) and reused by `q_minhash_pairs` /
     * `q_minhash_dedup` / `q_minhash_dedup_cc`. [[Dedup.minhashNearDupPairs]]
-    * materializes its result eagerly (localCheckpoint), so this memo is
+    * materializes its result eagerly (localCheckpoint), so this staging is
     * pure reuse, not deferred recompute — the in-session analogue of the
     * production pattern where the verified pair table is staged to
     * parquet once per corpus version and every survivor policy reads it
@@ -790,13 +667,8 @@ object SparkEntry {
     * policy would triple the dominant sig→band→verify cost for zero
     * information.
     */
-  private val nearDupPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  // checkpoint = false: this memo deliberately holds a PLAN (each
-  // consumer re-executes it), not materialized data — see the memo
-  // docstring above for why the pair table stays lazy here
   private def nearDupPairsShared(s: SparkSession, dir: String): DataFrame =
-    memoized(nearDupPairsMemo, s, dir, checkpoint = false)(
+    Staged(s, "near_dup_pairs", dir)(
       Dedup.minhashNearDupPairs(nearDupCorpus(s, dir), "doc_id", "text",
         numHashes = 64, bands = 32, threshold = 0.5))
 
@@ -811,60 +683,39 @@ object SparkEntry {
     * bit-identical to the one-shot operator (TimeSeriesSpec pins the
     * pooled-vs-direct differential), so both oracles stand unchanged.
     */
-  private val theilSenStageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
   private def theilSenStaged(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val key = (s, dir)
-    val hit = theilSenStageMemo.get(key)
-    if (hit != null) return hit
-    theilSenStageMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val ev = Tables.events(s, dir)
-      .select(col("user_id"), unix_timestamp(col("ts")).as("x"),
-        col("value"))
-    val (pts, pool) = operators.TimeSeries.theilSenPairPool(
-      ev, Seq("user_id"), "x", "value")
-    val staged = (pts.localCheckpoint(true), pool.localCheckpoint(true))
-    val prev = theilSenStageMemo.putIfAbsent(key, staged)
-    if (prev != null) {
-      // loser-unpersist, the memoized() convention (ADVICE r14)
-      unpersistCheckpointed(staged._1)
-      unpersistCheckpointed(staged._2)
-      prev
-    } else staged
-  }
+      : (DataFrame, DataFrame) =
+    Staged(s, "theil_sen_pool", dir) {
+      val ev = Tables.events(s, dir)
+        .select(col("user_id"), unix_timestamp(col("ts")).as("x"),
+          col("value"))
+      val (pts, pool) = operators.TimeSeries.theilSenPairPool(
+        ev, Seq("user_id"), "x", "value")
+      (pts.localCheckpoint(true), pool.localCheckpoint(true))
+    }
 
-  private def stagedHistoryBands(s: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val tag = Tables.dirTag(
-      s"$dir|${src.length()}|${src.lastModified()}")
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_staged_bands_$tag").getAbsolutePath
-    if (!new java.io.File(path, "_SUCCESS").exists())
+  /** Staged minhash band keys for the history corpus, written to
+    * parquet once per (session, corpus version) — the 100 TB operating
+    * mode, where re-ingest probes staged buckets instead of re-hashing
+    * the corpus, so min-of-N measures the steady-state probe. Each
+    * build writes a fresh path, so memoRead is safe on it (no per-call
+    * footer/partition-discovery metadata jobs). The parquet stagings
+    * below follow the same rule.
+    */
+  private[graft] def stagedHistoryBands(s: SparkSession,
+      dir: String): DataFrame =
+    Tables.memoRead(s, Staged.onDisk(s, "bands", dir)(path =>
       Dedup.stageBandKeys(
         Tables.documents(s, dir).select("doc_id", "text"),
-        "doc_id", "text", path, shingleK = 5, numHashes = 64, bands = 32)
-    // version-tagged path => immutable => memo-safe (no per-call
-    // footer/partition-discovery metadata jobs)
-    Tables.memoRead(s, path)
-  }
+        "doc_id", "text", path, shingleK = 5, numHashes = 64, bands = 32)))
 
   /** Staged resolved entity registry for the incremental-assignment
-    * probe — the [[stagedHistoryBands]] convention on the ER side:
-    * the corpus-wide resolution (`Dedup.resolveEntities` over parts +
-    * typo twins) is paid ONCE per (dir, version) and written to
-    * parquet; every serve tick reads it back, so the bench's min-of-N
-    * measures the steady-state assignment probe with the build
-    * amortized exactly as in production (a registry rebuild is a
-    * scheduled job, not a per-tick cost).
+    * probe: the corpus-wide resolution (`Dedup.resolveEntities` over
+    * parts + typo twins) is staged once and every serve tick reads it
+    * back (a registry rebuild is a scheduled job, not a per-tick cost).
     */
-  private def stagedErRegistry(s: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/part.parquet")
-    val tag = Tables.dirTag(
-      s"$dir|${src.length()}|${src.lastModified()}")
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_staged_er_$tag").getAbsolutePath
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  private def stagedErRegistry(s: SparkSession, dir: String): DataFrame =
+    Tables.memoRead(s, Staged.onDisk(s, "er", dir) { path =>
       val base = Tables.part(s, dir)
         .select(col("p_partkey").as("rec_id"), col("p_name").as("name"))
       val twins = Tables.part(s, dir)
@@ -875,26 +726,15 @@ object SparkEntry {
       Dedup.resolveEntities(base.unionByName(twins), "rec_id", "name",
           maxDist = 1, q = 3)
         .write.mode("overwrite").parquet(path)
-    }
-    Tables.memoRead(s, path)
-  }
+    })
 
-  /** Staged span hashes for the incremental substring-dedup probe —
-    * the [[stagedHistoryBands]] convention on the span side: the
-    * substring corpus's distinct 8-token window hashes are written
-    * once per (dir, version) and every probe reads them back.
+  /** Staged span hashes for the incremental substring-dedup probe:
+    * the substring corpus's distinct 8-token window hashes.
     */
-  private def stagedSpanHashes(s: SparkSession, dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val tag = Tables.dirTag(
-      s"$dir|${src.length()}|${src.lastModified()}|spans8")
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_staged_spans_$tag").getAbsolutePath
-    if (!new java.io.File(path, "_SUCCESS").exists())
+  private def stagedSpanHashes(s: SparkSession, dir: String): DataFrame =
+    Tables.memoRead(s, Staged.onDisk(s, "spans8", dir)(path =>
       Dedup.stageSpanHashes(substrCorpus(s, dir), "doc_id", "text",
-        path, k = 8)
-    Tables.memoRead(s, path)
-  }
+        path, k = 8)))
 
   /** The q_boilerplate corpus: every doc gets its source's banner
     * (100% of the domain → killed at the 0.5 threshold), every 4th
@@ -921,26 +761,15 @@ object SparkEntry {
           concat(lit("\nfollow "), col("source"), lit(" on social")))
           .otherwise(lit(""))).as("text"))
 
-  /** Staged domain-boilerplate kill list — the [[stagedSpanHashes]]
-    * convention on the CCNet-scrubber side: the corpus version's
-    * (domain, line-hash) kill list is written once per (dir, version)
-    * and every scrub tick reads it back, so the bench's min-of-N
-    * measures the steady-state batch scrub with the corpus-wide
-    * counting amortized exactly as in production (restaging is a
-    * scheduled job, not a per-tick cost). */
+  /** Staged domain-boilerplate kill list for the CCNet scrubber: the
+    * corpus version's (domain, line-hash) kill list, so every scrub
+    * tick skips the corpus-wide counting (restaging is a scheduled
+    * job, not a per-tick cost). */
   private def stagedBoilerplateKill(s: SparkSession,
-      dir: String): DataFrame = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val tag = Tables.dirTag(
-      s"$dir|${src.length()}|${src.lastModified()}|boiler5_500k")
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_staged_boiler_$tag").getAbsolutePath
-    if (!new java.io.File(path, "_SUCCESS").exists())
+      dir: String): DataFrame =
+    Tables.memoRead(s, Staged.onDisk(s, "boiler5_500k", dir)(path =>
       Dedup.stageBoilerplateKillList(boilerCorpus(s, dir), "doc_id",
-        "source", "text", path, minDomainDocs = 5L, minFraction = 0.5)
-    Tables.memoRead(s, path)
-  }
+        "source", "text", path, minDomainDocs = 5L, minFraction = 0.5)))
 
   /** FROZEN BPE merges — the tokenizer artifact (production
     * tokenizers ship exactly this: an ordered merges file, not the
@@ -2366,7 +2195,7 @@ object SparkEntry {
     // Gram matrix of the embedding corpus: dim(dim+1)/2 cells forever
     // (the bounded-artifact class), exact-decimal cells bit-identical
     // across partitionings and engines; surfaced as double. The gram
-    // job is memoized per (session, dir) — production builds it once
+    // job is staged per (session, dir) — production builds it once
     // per corpus version and derives every PCA artifact from it
     "q_gram_matrix" -> ((s, dir) =>
       gramShared(s, dir)

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ColumnBridge => ExpressionUtils}
 
 /** Scalar function surface F1–F14 (SURVEY §2.7), each a pure
   * `Column => Column` built from codegen'd Catalyst built-ins — no UDFs
@@ -17,11 +18,15 @@ object ScalarOps {
     * ValueError branch — plain `cast` throws under Spark 4's default
     * ANSI mode); `isnan` guard matches its `math.isnan` branch. Round
     * AFTER the NaN check: round(NaN) is NaN and would leak through.
+    * The reference rounds with `float(f"{v:.2f}")`, i.e. half-even on
+    * the exact binary value ("2.675" → 2.67), which is
+    * [[BinaryRound]], not Spark's half-up `round` (→ 2.68).
     */
   def parseRound2(c: Column): Column = {
     val d = c.try_cast("double")
     when(d.isNull || isnan(d), lit(null).cast("double"))
-      .otherwise(round(d, 2))
+      .otherwise(ExpressionUtils.column(
+        BinaryRound(ExpressionUtils.expression(d), 2)))
   }
 
   /** F2 — epoch seconds → `'yyyy-MM-dd HH:mm:ss'` string

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
@@ -178,7 +178,21 @@ object DecimalRound {
     * integer fast path generalized to scale 0..15. Differential-pinned
     * against Spark's own Round in PropertySpec.
     */
-  def fastRound(t: Double, scale: Int): Double = {
+  def fastRound(t: Double, scale: Int): Double =
+    roundWith(t, scale, exactBinary = false)
+
+  /** `t` rounded half-even to `scale` places on its EXACT binary
+    * value — Python's `float(f"{t:.2f}")` at scale 2, where Spark's
+    * Round (and [[fastRound]]) round half-up on the shortest decimal:
+    * 2.675 is stored as 2.67499999…, so this gives 2.67 and Round
+    * 2.68. Off a half-way boundary the two agree, so the same integer
+    * fast path serves both.
+    */
+  def binaryRound(t: Double, scale: Int): Double =
+    roundWith(t, scale, exactBinary = true)
+
+  private def roundWith(t: Double, scale: Int,
+      exactBinary: Boolean): Double = {
     if (java.lang.Double.isNaN(t) || java.lang.Double.isInfinite(t))
       return t
     val m = pow10(scale)
@@ -194,7 +208,9 @@ object DecimalRound {
         val r = fl / m; return r + 0.0
       }
     }
-    slowRound(t, scale)
+    if (exactBinary) new java.math.BigDecimal(t)
+      .setScale(scale, java.math.RoundingMode.HALF_EVEN).doubleValue()
+    else slowRound(t, scale)
   }
 
   def slowRound(t: Double, scale: Int): Double =
@@ -284,6 +300,22 @@ case class FastRound(child: Expression, roundScale: Int)
 
   override def prettyName: String = "fast_round"
 
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+/** [[DecimalRound.binaryRound]] as an expression. Not a `Round`, so
+  * [[graft.plans.FastRoundRewrite]] leaves it alone.
+  */
+case class BinaryRound(child: Expression, roundScale: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(DoubleType)
+  override def dataType: DataType = DoubleType
+  protected override def nullSafeEval(v: Any): Any =
+    DecimalRound.binaryRound(v.asInstanceOf[Double], roundScale)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.DecimalRound.binaryRound($c, $roundScale)")
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }

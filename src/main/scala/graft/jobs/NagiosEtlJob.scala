@@ -124,16 +124,19 @@ object NagiosEtlJob {
       fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Boolean = {
     val magic = Array[Byte]('P', 'A', 'R', '1')
+    // listed paths come back qualified (`file:/…`); an unqualified
+    // `dir` would never match them and the walk would climb to `/`
+    val root = fs.makeQualified(dir)
     val it = fs.listFiles(dir, /*recursive=*/ true)
     while (it.hasNext) {
       val st = it.next()
       val name = st.getPath.getName
       val hidden = // Spark/Hadoop convention: not part of the dataset
         name.startsWith("_") || name.startsWith(".")
-      val inScratch = { // any _temporary/.staging ancestor up to dir
+      val inScratch = { // any _temporary/.staging ancestor below dir
         var p = st.getPath.getParent
         var found = false
-        while (p != null && p != dir && !found) {
+        while (p != null && p != root && !found) {
           val n = p.getName
           found = n.startsWith("_") || n.startsWith(".")
           p = p.getParent

@@ -35,13 +35,74 @@ class EntrySpec extends SparkSpec {
   }
 
   test("all queries return rows on sf0.001") {
+    val sc = spark.sparkContext
     val empty =
       (SparkEntry.queries ++ SparkEntry.benchOnly ++ SparkEntry.verifyOnly)
         .flatMap { case (name, fn) =>
-          val n = fn(spark, sf("sf0.001")).count()
+          // one job group per query, as Bench runs them
+          sc.setJobGroup(name, name)
+          val n = try fn(spark, sf("sf0.001")).count()
+            finally sc.clearJobGroup()
           if (n == 0) Some(name) else None
         }
     assert(empty.isEmpty, s"empty results: $empty")
+    // the staging registry derived every consumer: the 25 queries the
+    // floor's staging_dependent list once named by hand, plus the 5
+    // that list missed
+    val consumers = Set("q_triangles", "q_kcore", "q_triangles_dist",
+      "q_kcore_dist", "q_pagerank", "q_personalized_pagerank",
+      "q_pagerank_dist", "q_personalized_pagerank_dist", "q_theil_sen",
+      "q_theil_sen_sampled", "q_repeated_spans", "q_substring_dedup",
+      "q_dup_text_fraction", "q_gram_matrix", "q_pca_power",
+      "q_pca_project", "q_pca_whiten", "q_bm25_topk", "q_bm25_pruned",
+      "q_minhash_pairs", "q_minhash_dedup", "q_minhash_dedup_cc",
+      "q_minhash_dedup_cc_dist", "q_dup_clusters", "q_dup_representatives",
+      "q_curation_v2", "q_curation_v3", "q_semdedup_pairs", "q_semdedup",
+      "q_split_leakage_safe")
+    val missed = consumers -- Staged.consumers
+    assert(missed.isEmpty, s"not recorded as staging consumers: $missed")
+  }
+
+  test("staging registry: a new session rebuilds its stagings, the " +
+      "old one keeps serving, a released session's root is deleted") {
+    def run(group: String, q: String,
+        s: org.apache.spark.sql.SparkSession = spark): Unit = {
+      spark.sparkContext.setJobGroup(group, group)
+      try SparkEntry.queries(q)(s, sf("sf0.001")).count()
+      finally spark.sparkContext.clearJobGroup()
+    }
+    run("registry-warm-1", "q_gram_matrix")
+    run("registry-warm-2", "q_gram_matrix")
+    assert(!Staged.builtBy("registry-warm-2").contains("gram"))
+    val fresh = spark.newSession()
+    run("registry-cold", "q_gram_matrix", fresh)
+    run("registry-cold", "q_minhash_incremental", fresh)
+    assert(Set("gram", "bands").subsetOf(Staged.builtBy("registry-cold")))
+    val root = Staged.root(fresh)
+    assert(root.list().exists(_.startsWith("bands_")))
+    Staged.release(fresh)
+    assert(!root.exists(), s"$root survived its session's release")
+  }
+
+  test("staging registry: rewriting a table in the source dir " +
+      "rebuilds the staging instead of serving stale rows") {
+    val copy = java.nio.file.Files.createTempDirectory("graftsrc")
+    new java.io.File(sf("sf0.001")).listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, copy.resolve(f.getName)))
+    val (dir, table) = (copy.toString, copy.resolve("part.parquet"))
+    def rows(): Long = Staged(spark, "part_rows", dir)(
+      spark.read.parquet(table.toString).count())
+    val before = rows()
+    // rewrite part.parquet in place with its even-keyed half
+    spark.read.parquet(table.toString).filter("p_partkey % 2 = 0")
+      .coalesce(1).write.parquet(s"$dir/rewrite")
+    java.nio.file.Files.move(new java.io.File(s"$dir/rewrite").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath, table,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/rewrite"))
+    val after = rows()
+    assert(after > 0 && after < before, s"$after rows after, $before before")
+    org.apache.commons.io.FileUtils.deleteQuietly(copy.toFile)
   }
 
   test("bench floor artifact min-merges same-fingerprint runs, keeps " +

@@ -170,6 +170,21 @@ class JobSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/data").count() == 1)
   }
 
+  test("a sink under a dot-named parent, passed as a plain path, keeps " +
+      "its dedup: three overlapping ticks land every row exactly once") {
+    val base = java.nio.file.Files.createTempDirectory("graftjobh").toString
+    val (in, out) = (s"$base/in", s"$base/.hidden/out")
+    val services = Seq("CPU Usage")
+    // each tick re-delivers every earlier host and adds one new host
+    for (hosts <- 1 to 3) {
+      land(in, (1 to hosts).map(h => (s"h$h", "CPU Usage", cpuBody)): _*)
+      NagiosEtlJob.runOnce(spark, in, out, s"$base/ckpt", services)
+    }
+    val sink = spark.read.parquet(s"$out/data")
+    assert(sink.count() == 3, sink.collect().mkString("\n"))
+    assert(sink.select("host_name").distinct().count() == 3)
+  }
+
   test("sink probe classifies committed vs aborted state: only a " +
       "trailing PAR1 footer counts as data, scratch/markers never do " +
       "(ADVICE r11)") {

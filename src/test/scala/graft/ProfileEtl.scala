@@ -35,13 +35,7 @@ object ProfileEtl {
     }
     for ((dir, hosts) <- targets; pass <- 1 to 2) {
       System.err.println(s"--- $dir hosts=$hosts pass $pass ---")
-      // the staged input (memoized by etlJobTick's convention)
-      val src = new java.io.File(s"$dir/events.parquet")
-      val tag = sources.Tables.dirTag(
-        s"$dir|${src.length()}|${src.lastModified()}|$hosts")
-      val inDir = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_etljob_in_$tag").getAbsolutePath
-      require(new java.io.File(inDir, "_SUCCESS").exists(), s"stage $inDir first")
+      val inDir = t("stage input (once)")(SparkEntry.etlJobInput(spark, dir, hosts))
       val batch = t("json_read+count") {
         val b = spark.read.schema(jobs.NagiosEtlJob.inputSchema).json(inDir)
         System.err.println(s"[etl]   docs=${b.count()}")
@@ -52,8 +46,8 @@ object ProfileEtl {
           graft.pipelines.HostMetrics.flattenResponses(batch),
           Seq("CPU Usage", "Swap Usage")).count()
       }
-      val base = java.nio.file.Files.createTempDirectory("graft_etlprof")
-        .toString
+      val base = java.nio.file.Files.createTempDirectory(
+        Staged.root(spark).toPath, "etlprof").toString
       t("ingestBatch(batch mode)") {
         jobs.NagiosEtlJob.ingestBatch(spark, batch, s"$base/out",
           Seq("CPU Usage", "Swap Usage"), 0L)

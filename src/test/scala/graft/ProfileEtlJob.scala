@@ -30,14 +30,10 @@ object ProfileEtlJob {
         f"[etljob] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
       r
     }
-    // staged input (etlJobTick's convention — warm it first)
+    // warm the tick once; it stages the input the passes below read
     SparkEntry.etlJobTick(spark, dir, hosts)
       .write.mode("overwrite").format("noop").save()
-    val src = new java.io.File(s"$dir/events.parquet")
-    val tag = sources.Tables.dirTag(
-      s"$dir|${src.length()}|${src.lastModified()}|$hosts")
-    val inDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_etljob_in_$tag").getAbsolutePath
+    val inDir = SparkEntry.etlJobInput(spark, dir, hosts)
 
     for (pass <- 1 to 3) {
       System.err.println(s"--- pass $pass ---")
@@ -57,8 +53,8 @@ object ProfileEtlJob {
       t("compute only (noop)") {
         routed.write.mode("overwrite").format("noop").save()
       }
-      val wdir = java.nio.file.Files.createTempDirectory("etljob_w")
-        .toString
+      val wdir = java.nio.file.Files.createTempDirectory(
+        Staged.root(spark).toPath, "etljob_w").toString
       t("partitioned append write") {
         routed.write.mode("append")
           .partitionBy("metric_family", "load_date")

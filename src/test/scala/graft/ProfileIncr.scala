@@ -31,16 +31,9 @@ object ProfileIncr {
       val batch = docs.filter(col("doc_id") < 20)
         .select((col("doc_id") + 1000000).as("doc_id"),
           concat(col("text"), lit(" near dup suffix")).as("text"))
-      // the staged read (includes one-time staging on first ever run)
-      val src = new java.io.File(s"$dir/documents.parquet")
-      val tag0 = sources.Tables.dirTag(s"$dir|${src.length()}|${src.lastModified()}")
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_staged_bands_$tag0").getAbsolutePath
+      // the staged read (includes the session's one-time staging in pass 1)
       val staged = t("staged_read") {
-        if (!new java.io.File(path, "_SUCCESS").exists())
-          operators.Dedup.stageBandKeys(docs, "doc_id", "text", path,
-            shingleK = 5, numHashes = 64, bands = 32)
-        val d = sources.Tables.memoRead(spark, path)
+        val d = SparkEntry.stagedHistoryBands(spark, dir)
         d.count(); d
       }
       t("scheme_check") {

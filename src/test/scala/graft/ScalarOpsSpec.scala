@@ -18,6 +18,18 @@ class ScalarOpsSpec extends SparkSpec {
       Some(12.0), None))
   }
 
+  test("F1 parseRound2 rounds the exact binary value half-even, as " +
+      "the reference's float(f\"{v:.2f}\") does") {
+    // 2.675 and 1.005 are stored just below the half-way point, 0.125
+    // and 0.375 exactly on it; half-up on the shortest decimal (Spark's
+    // round) gives 2.68, 1.01, 0.13, 0.38
+    val got = Seq("2.6750000000e+00", "1.0050000000e+00",
+      "1.2500000000e-01", "0.375", "-2.675")
+      .toDF("v").select(ScalarOps.parseRound2($"v").as("r"))
+      .as[Double].collect().toSeq
+    assert(got == Seq(2.67, 1.0, 0.12, 0.38, -2.67))
+  }
+
   test("F2/F3 epoch <-> datetime2 round-trip at second precision") {
     val epochs = Seq(0L, 1723402800L, 1723406455L)
     val got = epochs.toDF("e")
