@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     // official scale mode (VERDICT r4 task 5): SPARK_GRAFT_SCALE=10x
@@ -40,14 +40,6 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def secsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
-    // Force FULL evaluation of every output column with a noop sink:
-    // a count() action lets Catalyst prune the projection, so
-    // map-heavy queries (langid, doc stats, signatures) would be timed
-    // as bare row-count scans. (BASELINE.md protocol v2.)
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): Unit =
-      fn(spark, dir).write.mode("overwrite").format("noop").save()
     // Cache the base tables once (one materializing scan each): every
     // query's fresh `read.parquet(same path)` plan-matches the cached
     // relation, so 120 queries stop paying 120 redundant scans of the
@@ -64,7 +56,8 @@ object Bench {
       df.count()
       df
     }
-    System.err.println(f"[bench] table cache: ${secsSince(tCache)}%.1f s")
+    System.err.println(
+      f"[bench] table cache: ${(System.nanoTime() - tCache) / 1e9}%.1f s")
     // min-of-N per query: this host shows random 3-6s single-run spikes
     // on arbitrary queries; the min is the reproducible statistic. Full
     // passes (not back-to-back repeats) so one sustained host stall
@@ -84,33 +77,7 @@ object Bench {
         all.filter { case (k, _) => names(k) }
       case None => all
     }
-    val passResults = (1 to passes).map { p =>
-      val tPass = System.nanoTime()
-      val r = benched.map { case (name, fn) =>
-        // a failing pass must not contribute its time-to-failure as a
-        // "fast" sample — record it as +inf so min() only ever picks
-        // successful runs; all-failed surfaces as -1 in the JSON. Each
-        // query runs as its own job group, which is how the staging
-        // registry learns which queries consume a staging.
-        spark.sparkContext.setJobGroup(name, name)
-        val t0 = System.nanoTime()
-        val ok = try { run(fn, sfDir); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed in pass $p: $e")
-            false
-          } finally spark.sparkContext.clearJobGroup()
-        name -> (if (ok) secsSince(t0) else Double.PositiveInfinity)
-      }
-      val slow = r.toSeq.sortBy(-_._2).take(5)
-        .map { case (n, t) => f"$n=$t%.1f" }.mkString(" ")
-      System.err.println(
-        f"[bench] pass $p/$passes: ${secsSince(tPass)}%.1f s (slowest: $slow)")
-      r
-    }
-    val results = benched.keys.map { name =>
-      val best = passResults.map(_(name)).min
-      name -> (if (best.isInfinity) -1.0 else best)
-    }.toMap
+    val (results, failed) = timePasses(spark, benched, sfDir, passes)
     cachedTables.foreach(_.unpersist(false))
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -144,13 +111,69 @@ object Bench {
     // same-code floor instead of a single window. The fingerprint ties
     // the floor to the compiled SparkEntry class + the exact query
     // surface + the SF dir; any recompile or surface change resets it.
-    if (only.isEmpty) writeFloor(results, sfDir)
+    if (only.isEmpty) writeFloor(results, sfDir, failed = failed)
     spark.stop()
   }
 
+  /** Times `passes` full passes over `benched`, each query as its own
+    * job group; returns each query's best time (-1 if every pass
+    * failed) and the queries that failed in any pass.
+    */
+  private[graft] def timePasses(spark: SparkSession,
+      benched: Map[String, (SparkSession, String) => DataFrame],
+      dir: String, passes: Int): (Map[String, Double], Set[String]) = {
+    def secsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+    // Force FULL evaluation of every output column with a noop sink:
+    // a count() action lets Catalyst prune the projection, so
+    // map-heavy queries (langid, doc stats, signatures) would be timed
+    // as bare row-count scans. (BASELINE.md protocol v2.)
+    def run(fn: (SparkSession, String) => DataFrame): Unit =
+      fn(spark, dir).write.mode("overwrite").format("noop").save()
+    val passResults = (1 to passes).map { p =>
+      val tPass = System.nanoTime()
+      val r = benched.map { case (name, fn) =>
+        // a failing pass must not contribute its time-to-failure as a
+        // "fast" sample — record it as +inf so min() only ever picks
+        // successful runs; all-failed surfaces as -1 in the JSON. Each
+        // query runs as its own job group, which is how the staging
+        // registry learns which queries consume a staging.
+        spark.sparkContext.setJobGroup(name, name)
+        val t0 = System.nanoTime()
+        val ok = try { run(fn); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed in pass $p: $e")
+            false
+          } finally spark.sparkContext.clearJobGroup()
+        name -> (if (ok) secsSince(t0) else Double.PositiveInfinity)
+      }
+      val slow = r.toSeq.sortBy(-_._2).take(5)
+        .map { case (n, t) => f"$n=$t%.1f" }.mkString(" ")
+      System.err.println(
+        f"[bench] pass $p/$passes: ${secsSince(tPass)}%.1f s (slowest: $slow)")
+      r
+    }
+    val results = benched.keys.map { name =>
+      val best = passResults.map(_(name)).min
+      name -> (if (best.isInfinity) -1.0 else best)
+    }.toMap
+    val failed = passResults.flatMap(_.collect {
+      case (name, t) if t.isInfinity => name }).toSet
+    (results, failed)
+  }
+
+  /** Min-merges `results` into the same-code floor. A run with a
+    * failed pass is tainted and never merged: its other queries ran
+    * beside a failure, and the floor only takes clean runs.
+    */
   private[graft] def writeFloor(results: Map[String, Double],
       sfDir: String,
-      floorFile: String = "target/bench_floor.json"): Unit = {
+      floorFile: String = "target/bench_floor.json",
+      failed: Set[String] = Set.empty): Unit = {
+    if (failed.nonEmpty) {
+      System.err.println("[bench] run tainted by failed passes of " +
+        s"${failed.toSeq.sorted.mkString(", ")}: $floorFile not updated")
+      return
+    }
     val fp = {
       // content hash of the WHOLE compiled library, not just one
       // class (the r13 pageRank gate changed Behavior.scala without

@@ -23,7 +23,7 @@ import graft.sources.Sinks
   * Exactly-once into the sink without a transactional store: the
   * melted payload is anti-join-deduped against the rows already in
   * the sink's RECENT `load_date` partitions (`extract.py:115-132`'s
-  * cross-run dedup — whole-row 256-bit identity), so a tick that died
+  * cross-run dedup — exact whole-row identity), so a tick that died
   * between its parquet append and its checkpoint commit re-processes
   * the batch on restart and the dedup drops every already-landed row
   * — append + dedup composes to idempotent. The dedup window is
@@ -44,9 +44,12 @@ import graft.sources.Sinks
   *
   * Scale posture: one cron tick at 100 TB fleet size is a bounded
   * file listing (only unconsumed files), a map-side flatten/melt, one
-  * anti-join exchange against the horizon partitions' row keys, and a
-  * (family, load_date)-partitioned append — the same plan SURVEY §3.1
-  * argues for, wrapped in the orchestration the reference runs with.
+  * null-safe anti-join on the typed columns against the horizon
+  * partitions (broadcast while the horizon fits the threshold, a
+  * shuffled join on the same keys past it; no row hash, since a 64-byte
+  * hex key is no narrower than the row), and a (family,
+  * load_date)-partitioned append — the same plan SURVEY §3.1 argues
+  * for, wrapped in the orchestration the reference runs with.
   */
 object NagiosEtlJob {
 

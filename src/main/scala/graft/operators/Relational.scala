@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** Relational operator surface (SURVEY §2.3, §2.4, §2.6), each a pure
   * `DataFrame => DataFrame` transform that declares the logical plan and
@@ -11,9 +13,9 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB, 1000 executors):
   *  - membership/enrichment joins keep the small side broadcastable; the
   *    big fact side never shuffles for them.
-  *  - dedup variants that MUST shuffle (anti-join, distinct) shuffle on
-  *    a compact hash key, not whole rows, so the exchange payload stays
-  *    narrow.
+  *  - the cross-run anti-join dedup joins on the typed columns
+  *    themselves: its horizon side is broadcast at tick scale, and a
+  *    hash key would be no narrower than the row it stands for.
   *  - latest-per-key avoids a global sort: it is a hash repartition by
   *    key + per-partition sort (window), fully parallel.
   */
@@ -49,22 +51,44 @@ object Relational {
   /** J3 — anti-join dedup against a previous snapshot
     * (`extract.py:115-132`): current ∖ previous by whole-row equality,
     * column-order-insensitive (the reference canonicalizes with
-    * `json.dumps(sort_keys=True)`; Spark resolves join keys by name so
-    * ordering is moot).
+    * `json.dumps(sort_keys=True)`; the join resolves columns by name).
+    * Every copy of a matched current row is dropped, as the reference's
+    * set-membership filter does.
     *
-    * At 100 TB the exchange ships only a 256-bit row hash per side, not
-    * the full row: both sides are hashed (F11), anti-joined on the hash,
-    * and the surviving hashes keep their payload columns. Null-safe
-    * equality is inherent (hash of null is stable), unlike a naive
-    * multi-column join where `null = null` is false.
+    * The key is the typed columns themselves under null-safe equality
+    * (`<=>`), so null matches null and the join stays exact — no hash
+    * collision can drop a new row. Spark's join normalizes `-0.0` to
+    * `0.0` (and every NaN to one NaN); the reference's `json.dumps`
+    * keeps the zeros apart, so each top-level float/double column adds
+    * a key that is the value's text on zeros only; a column Spark
+    * cannot compare (a map) is compared by its text. The previous side's
+    * columns are renamed first, since `previous` is often derived from
+    * `current`.
+    *
+    * No row hash: a 256-bit key as hex is 64 bytes, no narrower than
+    * the Nagios row it replaces, and building it for every row on both
+    * sides was most of each tick's dedup time. At tick scale the
+    * horizon side is under the broadcast threshold, so nothing
+    * shuffles; a horizon past the threshold plans a shuffled join on
+    * the same typed keys.
     */
   def antiJoinDedup(current: DataFrame, previous: DataFrame): DataFrame = {
-    val cols = current.columns.toSeq
-    val key = graft.functions.ScalarOps.canonicalRowKey(cols)
-    current.withColumn("__row_key", key)
-      .join(previous.select(key.as("__row_key")), Seq("__row_key"),
-        "left_anti")
-      .drop("__row_key")
+    val prevName = (c: String) => s"__prev_$c"
+    val prev = previous.select(
+      current.columns.toSeq.map(c => col(c).as(prevName(c))): _*)
+    val same = current.schema.fields.toSeq.map { f =>
+      val (c, p) = (current(f.name), prev(prevName(f.name)))
+      f.dataType match {
+        case DoubleType | FloatType =>
+          def zero(x: Column) = when(x === 0, x.cast("string"))
+          (c <=> p) && (zero(c) <=> zero(p))
+        // maps have no equality in Spark; compare their text
+        case t if !RowOrdering.isOrderable(t) =>
+          c.cast("string") <=> p.cast("string")
+        case _ => c <=> p
+      }
+    }
+    current.join(prev, same.reduce(_ && _), "left_anti")
   }
 
   /** J4 — cross-product fan-out: every host × every registered service

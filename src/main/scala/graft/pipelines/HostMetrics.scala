@@ -17,9 +17,11 @@ import graft.operators.Relational
   *
   * Scale: at 100 TB the fetch fan-out table is repartitioned to cluster
   * width; per-family pivots are narrow `select`s (no shuffle); dedup
-  * exchanges 256-bit row hashes only; the family routing is a single
-  * `partitionBy` write, not 4 scans (`load_to_db.py:34-48` does 4
-  * passes over the payload).
+  * is a null-safe anti-join on the payload's typed columns, broadcast
+  * while the previous side fits the threshold and a shuffled join on
+  * the same keys past it (a row hash would be no narrower than the
+  * 5-column row); the family routing is a single `partitionBy` write,
+  * not 4 scans (`load_to_db.py:34-48` does 4 passes over the payload).
   */
 object HostMetrics {
 

@@ -15,7 +15,7 @@ import graft.sources.Sinks
 class EndToEndSpec extends SparkSpec {
 
   private lazy val endpointDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("grafte2e")
+    val d = tempDir("grafte2e")
     def write(host: String, service: String, body: String): Unit =
       java.nio.file.Files.writeString(
         d.resolve(graft.sources.rest.NagiosRestSource.taskFile(host, service)),
@@ -53,7 +53,7 @@ class EndToEndSpec extends SparkSpec {
     assert(fresh.count() == 9)
 
     // K6: partitioned parquet by metric family
-    val outDir = java.nio.file.Files.createTempDirectory("grafte2eout").toString
+    val outDir = tempDir("grafte2eout").toString
     HostMetrics.writePartitioned(fresh, outDir)
     val back = spark.read.parquet(outDir)
     assert(back.select("metric_family").distinct()
@@ -110,8 +110,7 @@ class EndToEndSpec extends SparkSpec {
       Sampling.shardByBudget(picked, "doc_id", "n_tokens",
         budget = 2000L)
     }
-    val out = java.nio.file.Files
-      .createTempDirectory("graftcurated").toString
+    val out = tempDir("graftcurated").toString
     pipeline().write.mode("overwrite").parquet(out)
     val shards = spark.read.parquet(out)
     assert(shards.count() == 100)
@@ -157,7 +156,7 @@ class EndToEndSpec extends SparkSpec {
     val rel = Behavior.reliability(ev, "user_id", "event_type", "ts",
       "event_id", downState = "error")
     val report = avail.join(rel, Seq("user_id"), "left")
-    val out = java.nio.file.Files.createTempDirectory("graftsla").toString
+    val out = tempDir("graftsla").toString
     Sinks.writeOrc(report, out)
     val back = Sinks.readOrc(spark, out)
     assert(back.count() == avail.count() && back.count() > 0)

@@ -86,7 +86,7 @@ class EntrySpec extends SparkSpec {
 
   test("staging registry: rewriting a table in the source dir " +
       "rebuilds the staging instead of serving stale rows") {
-    val copy = java.nio.file.Files.createTempDirectory("graftsrc")
+    val copy = tempDir("graftsrc")
     new java.io.File(sf("sf0.001")).listFiles().foreach(f =>
       java.nio.file.Files.copy(f.toPath, copy.resolve(f.getName)))
     val (dir, table) = (copy.toString, copy.resolve("part.parquet"))
@@ -102,13 +102,11 @@ class EntrySpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/rewrite"))
     val after = rows()
     assert(after > 0 && after < before, s"$after rows after, $before before")
-    org.apache.commons.io.FileUtils.deleteQuietly(copy.toFile)
   }
 
   test("bench floor artifact min-merges same-fingerprint runs, keeps " +
       "failure sentinels out of the min, resets on surface change") {
-    val f = java.nio.file.Files.createTempFile("graftfloor", ".json")
-      .toString
+    val f = tempDir("graftfloor").resolve("floor.json").toString
     def read() = {
       val m = new com.fasterxml.jackson.databind.ObjectMapper()
       m.readTree(new java.io.File(f))
@@ -129,6 +127,28 @@ class EntrySpec extends SparkSpec {
     val n3 = read()
     assert(n3.get("runs").asLong() == 1L)
     assert(n3.get("queries").get("a").asDouble() == 9.0)
+  }
+
+  test("bench floor: a run with a failed pass is tainted and leaves " +
+      "the floor file unchanged") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    val f = tempDir("graftfloor").resolve("floor.json")
+    Bench.writeFloor(Map("ok" -> 2.0, "flaky" -> 1.0), "sfX", f.toString)
+    val before = java.nio.file.Files.readAllBytes(f)
+    // fails in pass 1 only, so its best time is a real sample
+    var calls = 0
+    val benched = Map[String, (SparkSession, String) => DataFrame](
+      "ok" -> ((s, _) => s.range(10).toDF()),
+      "flaky" -> ((s, _) => {
+        calls += 1
+        if (calls == 1) throw new IllegalStateException("boom")
+        s.range(10).toDF()
+      }))
+    val (results, failed) = Bench.timePasses(spark, benched, "sfX", 2)
+    assert(failed == Set("flaky") && results("flaky") >= 0)
+    Bench.writeFloor(results, "sfX", f.toString, failed = failed)
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(f),
+      before))
   }
 
   test("benchOnly is disjoint from queries and never oracled") {

@@ -457,8 +457,7 @@ class ExtensionOpsSpec extends SparkSpec {
       (3L, "a", "banner a\nbody three"), (4L, "a", "banner a\nbody four"),
       (5L, "a", "banner a\nbody five"))
       .toDF("doc_id", "source", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graftboiler").toString
+    val dir = tempDir("graftboiler").toString
     Dedup.stageBoilerplateKillList(hist, "doc_id", "source", "text",
       dir, minDomainDocs = 5L, minFraction = 0.5)
     val staged = spark.read.parquet(dir)
@@ -756,7 +755,7 @@ class ExtensionOpsSpec extends SparkSpec {
       .unionByName(crossDups).unionByName(intraDups)
     val corpus = history.unionByName(batch)
 
-    val staged = java.nio.file.Files.createTempDirectory("graftstage").toString
+    val staged = tempDir("graftstage").toString
     Dedup.stageBandKeys(history, "doc_id", "text", staged,
       numHashes = 64, bands = 32)
     val incr = Dedup.minhashNearDupPairsIncremental(batch, corpus,
@@ -786,7 +785,7 @@ class ExtensionOpsSpec extends SparkSpec {
     // a staged path that accumulated TWO epochs' schemes is refused
     // even when the probe matches one of them — a head-sampled guard
     // would pass and silently miss the other epoch's pairs
-    val staged2 = java.nio.file.Files.createTempDirectory("graftstage2").toString
+    val staged2 = tempDir("graftstage2").toString
     Dedup.stageBandKeys(history, "doc_id", "text", staged2,
       numHashes = 64, bands = 16)
     val mixed = spark.read.parquet(staged)
@@ -812,7 +811,7 @@ class ExtensionOpsSpec extends SparkSpec {
     val base = docs.select("doc_id", "text")
     val history = base.filter(col("doc_id") >= 100)
     val empty = base.filter(col("doc_id") < 0)
-    val staged = java.nio.file.Files.createTempDirectory("graftstage3")
+    val staged = tempDir("graftstage3")
       .toString
     Dedup.stageBandKeys(history, "doc_id", "text", staged,
       numHashes = 64, bands = 32)
@@ -1239,7 +1238,7 @@ class ExtensionOpsSpec extends SparkSpec {
     val media = Multimodal.fromBinary(
       docs.limit(10), "doc_id", "text", "text/plain")
     assert(shape(media.schema) == shape(Multimodal.mediaSchema))
-    val dir = java.nio.file.Files.createTempDirectory("graftmedia").toString
+    val dir = tempDir("graftmedia").toString
     media.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == 10)

@@ -25,7 +25,7 @@ class JobSpec extends SparkSpec {
 
   test("NagiosEtlJob cron tick: AvailableNow consumes once, sink dedup " +
       "makes re-delivery and mid-batch restart idempotent") {
-    val base = java.nio.file.Files.createTempDirectory("graftjob").toString
+    val base = tempDir("graftjob").toString
     val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
     val services = Seq("CPU Usage", "Swap Usage")
     def sink() = spark.read.parquet(s"$out/data")
@@ -74,7 +74,7 @@ class JobSpec extends SparkSpec {
 
   test("dedup window is bounded: rows older than the horizon no " +
       "longer suppress a re-delivery; a wider horizon does") {
-    val base = java.nio.file.Files.createTempDirectory("graftjobw").toString
+    val base = tempDir("graftjobw").toString
     val (in, out) = (s"$base/in", s"$base/out")
     val services = Seq("CPU Usage")
     def sink() = spark.read.parquet(s"$out/data")
@@ -108,7 +108,7 @@ class JobSpec extends SparkSpec {
 
   test("pre-load_date sink keeps its old layout: full-sink dedup, no " +
       "mixed partition depths, sink stays readable") {
-    val base = java.nio.file.Files.createTempDirectory("graftjobm").toString
+    val base = tempDir("graftjobm").toString
     val (in, out) = (s"$base/in", s"$base/out")
     val services = Seq("CPU Usage")
     def sink() = spark.read.parquet(s"$out/data")
@@ -143,7 +143,7 @@ class JobSpec extends SparkSpec {
   test("existing-but-unreadable data dir does not wedge the job: a " +
       "footerless first append reads as an empty sink, the next tick " +
       "lands and the sink becomes readable (ADVICE r10)") {
-    val base = java.nio.file.Files.createTempDirectory("graftjobu").toString
+    val base = tempDir("graftjobu").toString
     val (in, out) = (s"$base/in", s"$base/out")
     val services = Seq("CPU Usage")
     // fabricate the wedge state: the data dir EXISTS but holds only a
@@ -172,7 +172,7 @@ class JobSpec extends SparkSpec {
 
   test("a sink under a dot-named parent, passed as a plain path, keeps " +
       "its dedup: three overlapping ticks land every row exactly once") {
-    val base = java.nio.file.Files.createTempDirectory("graftjobh").toString
+    val base = tempDir("graftjobh").toString
     val (in, out) = (s"$base/in", s"$base/.hidden/out")
     val services = Seq("CPU Usage")
     // each tick re-delivers every earlier host and adds one new host
@@ -188,7 +188,7 @@ class JobSpec extends SparkSpec {
   test("sink probe classifies committed vs aborted state: only a " +
       "trailing PAR1 footer counts as data, scratch/markers never do " +
       "(ADVICE r11)") {
-    val base = java.nio.file.Files.createTempDirectory("graftprobe")
+    val base = tempDir("graftprobe")
     val dir = new org.apache.hadoop.fs.Path(base.toString)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def put(rel: String, bytes: Array[Byte]): Unit = {
@@ -223,7 +223,7 @@ class JobSpec extends SparkSpec {
     // Spark's partition discovery refuses. Treating this as "empty
     // sink" would silently disable dedup and keep appending into the
     // broken layout forever; the job must fail the tick loudly.
-    val base = java.nio.file.Files.createTempDirectory("graftprop").toString
+    val base = tempDir("graftprop").toString
     val (in, out) = (s"$base/in", s"$base/out")
     val services = Seq("CPU Usage")
     land(in, ("h1", "CPU Usage", cpuBody))

@@ -63,12 +63,12 @@ class LayoutSpec extends SparkSpec {
       (perFile.getDouble(0), perFile.getDouble(1))
     }
 
-    val zDir = java.nio.file.Files.createTempDirectory("graftz").toString
+    val zDir = tempDir("graftz").toString
     Layout.writeClustered(df, zDir, "x", "y", numFiles)
     val (zx, zy) = meanExtents(zDir)
 
     // the single-column sort layout: perfect on x, useless on y
-    val sDir = java.nio.file.Files.createTempDirectory("grafts").toString
+    val sDir = tempDir("grafts").toString
     df.repartitionByRange(numFiles, col("x"))
       .sortWithinPartitions(col("x"))
       .write.mode("overwrite").parquet(sDir)

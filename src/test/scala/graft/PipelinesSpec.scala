@@ -94,7 +94,7 @@ class PipelinesSpec extends SparkSpec {
     val fams = routed.select("metric_family").distinct()
       .as[String].collect().toSet
     assert(fams == Set("mem", "cpu"))
-    val dir = java.nio.file.Files.createTempDirectory("graft").toString
+    val dir = tempDir("graft").toString
     HostMetrics.writePartitioned(HostMetrics.longPayload(flat), dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == 6 &&

@@ -676,7 +676,7 @@ class PlanSpec extends SparkSpec {
     // the K6 layout: one directory per metric_family (HostMetrics
     // .writePartitioned); at 100 TB a single-family query must read
     // one directory, not filter the whole lake
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val out = tempDir("graft_part").toString
     (0 until 400).map(i => (i.toLong, s"h$i", Seq("cpu", "swap", "mem",
         "disk")(i % 4)))
       .toDF("v", "host_name", "metric_family")

@@ -15,7 +15,7 @@ class PointsSinkSpec extends SparkSpec {
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graftpoints").toString
+    tempDir("graftpoints").toString
 
   private def points = Seq(
     ("hostA", "CPU load", 0L, 0.42, ts("2024-01-01 00:00:00")),
@@ -314,8 +314,9 @@ class PointsSinkSpec extends SparkSpec {
     }
     assert(e3.getMessage.contains("sslVerify"))
     // valid pair + verify=false round-trips into the executor conf
-    val cert = Files.createTempFile("graftcert", ".pem")
-    val key = Files.createTempFile("graftkey", ".pem")
+    val pem = tempDir("graftpem")
+    val cert = Files.createFile(pem.resolve("cert.pem"))
+    val key = Files.createFile(pem.resolve("key.pem"))
     val ok = conf(Map("clientCertPath" -> cert.toString,
       "clientKeyPath" -> key.toString, "sslVerify" -> "false"))
     assert(ok.tls == graft.sources.points.PointsTlsConf(

@@ -63,6 +63,75 @@ class PropertySpec extends SparkSpec {
     assert(remaining.size == curOnly.size)
   }
 
+  test("J3: typed anti-join == the canonicalRowKey hash anti-join " +
+      "(nulls, duplicate rows, NaN, signed zeros, reordered and " +
+      "self-derived previous)") {
+    import org.apache.spark.sql.DataFrame
+    // the hash-keyed anti-join the typed key replaced, as the reference
+    def hashed(cur: DataFrame, prev: DataFrame): DataFrame = {
+      val key = ScalarOps.canonicalRowKey(cur.columns.toSeq)
+      cur.withColumn("__row_key", key)
+        .join(prev.select(key.as("__row_key")), Seq("__row_key"),
+          "left_anti")
+        .drop("__row_key")
+    }
+    // text form keeps -0.0 apart from 0.0, as the row identity must
+    def rows(df: DataFrame): Seq[String] = df.collect().toSeq
+      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
+    val row = for {
+      k <- Gen.option(Gen.chooseNum(0, 3))
+      v <- Gen.option(Gen.oneOf("a", "b"))
+      d <- Gen.option(Gen.oneOf(0.0, -0.0, Double.NaN, 1.5))
+      f <- Gen.option(Gen.oneOf(0.0f, -0.0f, Float.NaN, 2.5f))
+    } yield (k, v, d, f)
+    def sample(n: Int, seed: Long) = Gen.listOfN(n, row)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))
+    // fixtures keyed outside the random k domain
+    val (neg, nan) = ((Option(7), Option("a"), Option(-0.0), Option(1f)),
+      (Option(8), Option("b"), Option(Double.NaN), Option(Float.NaN)))
+    val curRows = sample(300, 1L) ++ Seq(neg, nan, nan)
+    val prevRows = sample(100, 2L) ++ curRows.take(40) ++
+      Seq(neg.copy(_3 = Option(0.0)), nan)
+    val current = curRows.toDF("k", "v", "d", "f")
+    // previous with its columns in another order
+    val previous = prevRows.toDF("k", "v", "d", "f").select("f", "d", "v", "k")
+    val got = rows(Relational.antiJoinDedup(current, previous))
+    assert(got == rows(hashed(current, previous)))
+    // -0.0 is not 0.0, NaN is NaN, and every copy of a match goes
+    assert(got.contains("7|a|-0.0|1.0") && !got.exists(_.startsWith("8|")))
+    assert(curRows.diff(curRows.distinct).exists(prevRows.contains))
+    // previous derived from current (a self-join)
+    val derived = current.filter($"k".isNull || $"k" < 2)
+    assert(rows(Relational.antiJoinDedup(current, derived)) ==
+      rows(hashed(current, derived)))
+    // a map column, which has no equality of its own
+    val maps = current.withColumn("m", map(lit("k"), $"k"))
+    val mapsPrev = maps.filter($"k" === 1)
+    assert(rows(Relational.antiJoinDedup(maps, mapsPrev)) ==
+      rows(hashed(maps, mapsPrev)))
+  }
+
+  test("J3 plan: HostMetrics.dedupAgainst executes an anti-join with " +
+      "no Sha2 row key") {
+    import org.apache.spark.sql.catalyst.expressions.Sha2
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val payload = spark.range(200).select(
+      concat(lit("h"), $"id" % 7).as("host_name"), $"id".as("timestamp"),
+      lit("CPU Usage").as("service_name"), lit("load").as("metric_name"),
+      ($"id" / 4).as("value"))
+    val out = graft.pipelines.HostMetrics.dedupAgainst(payload,
+      payload.filter($"timestamp" % 3 === 0))
+    assert(out.count() == 133)
+    val plan = out.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(helper.collect(plan) {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j }.nonEmpty, plan)
+    assert(!helper.collect(plan) { case p => p }.flatMap(_.expressions)
+      .exists(_.exists(_.isInstanceOf[Sha2])), plan)
+  }
+
   test("as-of join == driver-side per-probe scan on random data") {
     // random probes/builds over few keys with heavy ts collisions —
     // the regime where the tagged-union window form could mis-order

@@ -61,7 +61,7 @@ class RestSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graftrest")
+    val d = tempDir("graftrest")
     def write(host: String, service: String, body: String): Unit =
       java.nio.file.Files.writeString(
         d.resolve(graft.sources.rest.NagiosRestSource.taskFile(host, service)),
@@ -114,7 +114,7 @@ class RestSourceSpec extends SparkSpec {
   }
 
   test("null/garbage epoch rows respect a pushed epoch bound (residual)") {
-    val d = java.nio.file.Files.createTempDirectory("graftrest2")
+    val d = tempDir("graftrest2")
     java.nio.file.Files.writeString(
       d.resolve(graft.sources.rest.NagiosRestSource.taskFile("hX", "CPU Usage")),
       """{"data": {"row": [
@@ -209,7 +209,7 @@ class RestSourceSpec extends SparkSpec {
   }
 
   test("permissive mode dead-letters an unparseable response body too") {
-    val d = java.nio.file.Files.createTempDirectory("graftrest3")
+    val d = tempDir("graftrest3")
     java.nio.file.Files.writeString(
       d.resolve(graft.sources.rest.NagiosRestSource.taskFile("hA", "CPU Usage")),
       "this is not json {{{")

@@ -204,7 +204,7 @@ class ScaleTechniquesSpec extends SparkSpec {
   }
 
   test("bucketed tables join without any exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graftwh").toString
+    val wh = tempDir("graftwh").toString
     val s = spark
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -10,7 +10,7 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graftsinks").toString
+    tempDir("graftsinks").toString
 
   private lazy val payload = Seq(
     ("web01", "2024-08-11 19:00:00", "CPU Usage", 42.12),

@@ -1,14 +1,34 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites
   * run sequentially under sbt's forked test JVM).
   */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A fresh `java.io.tmpdir` dir named `prefix…`, deleted with its
+    * contents when the suite ends.
+    */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
 }
 
 object SparkSpec {

@@ -160,8 +160,8 @@ class StreamingSpec extends SparkSpec {
 
   test("dedup state survives query restart via checkpoint (K6 recovery)") {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graftckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graftckptout").toString
+    val ckpt = tempDir("graftckpt").toString
+    val out = tempDir("graftckptout").toString
     val input = MemoryStream[Point]
 
     // memory sink can't recover from checkpoints; foreachBatch can
@@ -212,8 +212,8 @@ class StreamingSpec extends SparkSpec {
 
   test("stateful latest-per-key state survives restart via checkpoint") {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graftstateckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graftstateout").toString
+    val ckpt = tempDir("graftstateckpt").toString
+    val out = tempDir("graftstateout").toString
     val input = MemoryStream[Point]
 
     def start() = StreamingDedup.latestPerKeyStateful(input.toDF(), "host",
@@ -568,8 +568,8 @@ class StreamingSpec extends SparkSpec {
       "restart via checkpoint") {
     import graft.operators.TimeSeries
     implicit val sq = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graftrateck").toString
-    val out = java.nio.file.Files.createTempDirectory("graftrateout").toString
+    val ckpt = tempDir("graftrateck").toString
+    val out = tempDir("graftrateout").toString
     def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
     val input = MemoryStream[(String, java.sql.Timestamp, Long, Double)]
     def start() = StreamingDedup.rateStream(
@@ -666,8 +666,8 @@ class StreamingSpec extends SparkSpec {
       "checkpoint — a half-counted problem keeps counting") {
     import graft.operators.Behavior
     implicit val sq = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("grafthsck").toString
-    val out = java.nio.file.Files.createTempDirectory("grafthsout").toString
+    val ckpt = tempDir("grafthsck").toString
+    val out = tempDir("grafthsout").toString
     def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
     val input = MemoryStream[(String, java.sql.Timestamp, Long, String)]
     def start() = StreamingDedup.hardSoftStateStream(
@@ -815,7 +815,7 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch idempotent parquet sink") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graftsink").toString
+    val dir = tempDir("graftsink").toString
     val input = MemoryStream[Point]
     val q = StreamingDedup.dedupedStream(input.toDF(), "ts", "1 hour")
       .writeStream
@@ -849,10 +849,8 @@ class StreamingSpec extends SparkSpec {
     // into the next version.
     import graft.operators.Dedup
     implicit val sqlCtx = spark.sqlContext
-    val histDir = java.nio.file.Files
-      .createTempDirectory("graftbands").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graftcurated").toString
+    val histDir = tempDir("graftbands").toString
+    val outDir = tempDir("graftcurated").toString
     val hist = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "history keeps completely different second content"))
@@ -900,10 +898,8 @@ class StreamingSpec extends SparkSpec {
     // (corpus ∪ batch) restricted to batch ids.
     import graft.operators.Dedup
     implicit val sqlCtx = spark.sqlContext
-    val spanDir = java.nio.file.Files
-      .createTempDirectory("graftspans").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graftsubout").toString
+    val spanDir = tempDir("graftspans").toString
+    val outDir = tempDir("graftsubout").toString
     val boiler = "all rights reserved contact the site administrator now"
     val hist = Seq(
       (1L, s"first article body text here $boiler"),
@@ -978,8 +974,7 @@ class StreamingSpec extends SparkSpec {
     // wait for the rebuild — the resolveEntitiesAgainst contract)
     import graft.operators.Dedup
     implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graftassign").toString
+    val outDir = tempDir("graftassign").toString
     val registry = Seq(
       (1L, "alpha", 1L), (2L, "alphq", 1L), (4L, "zzzz", 4L))
       .toDF("rec_id", "name", "entity_id")
@@ -1027,10 +1022,8 @@ class StreamingSpec extends SparkSpec {
     // domains — per-doc and state-free, so batch == stream exactly
     import graft.operators.Dedup
     implicit val sqlCtx = spark.sqlContext
-    val killDir = java.nio.file.Files
-      .createTempDirectory("graftboilkill").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graftboilout").toString
+    val killDir = tempDir("graftboilkill").toString
+    val outDir = tempDir("graftboilout").toString
     val hist = Seq(
       (1L, "a", "cookie banner\nbody one"),
       (2L, "a", "cookie banner\nbody two"),
@@ -1621,7 +1614,7 @@ class StreamingSpec extends SparkSpec {
     // latest-per-key picks the same winners
     import graft.operators.Relational
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graftcdc").toString
+    val dir = tempDir("graftcdc").toString
     Seq((1L, "a", 1L), (2L, "b", 1L))
       .toDF("k", "v", "ts").write.parquet(s"$dir/base")
     // (k, v, ts, op): updates to k=1 across batches, delete of k=2,
@@ -1727,7 +1720,7 @@ class StreamingSpec extends SparkSpec {
     // mergeability law, exercised here over the streaming path
     import graft.operators.TextOps
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graftidx").toString
+    val dir = tempDir("graftidx").toString
     val input = MemoryStream[(Long, String)]
     val q = input.toDF().toDF("doc_id", "text")
       .writeStream
@@ -2220,8 +2213,8 @@ class StreamingSpec extends SparkSpec {
   test("availabilityStream island state survives query restart via " +
       "checkpoint; post-restart interval merges with pre-restart islands") {
     implicit val sq = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graftavck").toString
-    val out = java.nio.file.Files.createTempDirectory("graftavout").toString
+    val ckpt = tempDir("graftavck").toString
+    val out = tempDir("graftavout").toString
     val input = MemoryStream[(String, Long, Long)]
     def start() = StreamingDedup.availabilityStream(
         input.toDF().toDF("host", "lo", "hi"),
