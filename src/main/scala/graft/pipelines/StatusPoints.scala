@@ -2,6 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 import graft.functions.ScalarOps
@@ -12,11 +13,13 @@ import graft.operators.Relational
   * (`url_service_status_InfluxDB_insert.py`).
   *
   * Reference: 3 API fetches, a Python-set semi-join, a dict-probe
-  * enrichment join, per-row normalization, two sinks. Here:
+  * enrichment join, per-row normalization, two sinks, all from one
+  * list of points (`url...py:110-133`). Here:
   * `status ⋈(semi) members ⋈(broadcast-left) details` → column
-  * transforms → one cached frame feeding both sinks. The whole plan is
-  * a single stage (both joins broadcast); at 100 TB of status rows the
-  * fact side streams straight through map tasks.
+  * transforms → one frame whose plan runs once for both sinks
+  * ([[points]]). The plan is the broadcast builds plus a single stage;
+  * at 100 TB of status rows the fact side streams straight through
+  * map tasks.
   */
 object StatusPoints {
 
@@ -38,6 +41,16 @@ object StatusPoints {
     *
     * Output: point-shaped rows (measurement, tags..., fields..., time)
     * (`url...py:110-123`).
+    *
+    * The plan runs once however many sinks read the frame
+    * ([[org.apache.spark.sql.graft.PlanBridge.runOnce]]): the
+    * broadcast jobs run when `points` is called (so an unreadable
+    * input fails here), the first action computes the partitions and
+    * stores them with their lineage, and later actions, the audit
+    * write among them, read the stored blocks. A lost block is
+    * recomputed from the inputs. The ContextCleaner releases the
+    * blocks once the frame is unreachable, so a poller that drops
+    * each poll's frame piles nothing up.
     */
   def points(status: DataFrame, members: DataFrame, details: DataFrame,
       measurement: String): DataFrame = {
@@ -48,7 +61,7 @@ object StatusPoints {
     val detailsSlim = Relational.semiJoinMembers(details, members, keys)
     val enriched = filtered.join(broadcast(detailsSlim), keys, "left")
 
-    enriched
+    PlanBridge.runOnce(enriched
       // P6: drop rows missing last_check (`url...py:97-100`); "" is
       // falsy in Python, so empty string drops too.
       .filter(col("last_check").isNotNull && col("last_check") =!= "")
@@ -74,7 +87,7 @@ object StatusPoints {
         coalesce(col("display_name"), lit("unknown")).as("display_name"),
         col("friendlyname"), col("crownjewel"),
         col("service_status"), col("service_status_numeric"),
-        col("time"))
+        col("time")))
   }
 
   /** Typed view of the point stream (fixed shape ⇒ Dataset[T]). */
@@ -88,8 +101,9 @@ object StatusPoints {
   }
 
   /** K3 — the 4-column CSV audit projection (`url...py:80,128-133`),
-    * taken off the same cached frame as the point sink so the plan runs
-    * once.
+    * taken off the [[points]] frame. Written after the point sink, it
+    * reads the partitions that write stored: no input scan and no
+    * broadcast runs again.
     */
   def auditRows(points: DataFrame): DataFrame =
     points.select("host_name", "service_description", "friendlyname",

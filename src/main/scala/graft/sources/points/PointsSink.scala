@@ -4,12 +4,15 @@ import java.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 WRITE connector for tagged time-series points
   * (SURVEY §2.2 K5): the engine-grade form of the reference's
@@ -118,6 +121,40 @@ case class PointsTlsConf(clientCertPath: Option[String],
     clientKeyPath: Option[String], sslVerify: Boolean)
     extends Serializable
 
+object PointsTlsConf {
+  /** JVM defaults: no client credentials, verification on. */
+  val default: PointsTlsConf = PointsTlsConf(None, None, sslVerify = true)
+
+  /** Build-time validation of the TLS/auth option surface
+    * (`clientCertPath`, `clientKeyPath`, `sslVerify`): cert and key
+    * must come together (the reference passes them as a pair), named
+    * files must exist, and the verify flag must parse.
+    */
+  def fromOptions(option: String => Option[String]): PointsTlsConf = {
+    val cert = option("clientCertPath").filter(_.nonEmpty)
+    val key = option("clientKeyPath").filter(_.nonEmpty)
+    (cert, key) match {
+      case (Some(_), None) | (None, Some(_)) =>
+        throw new IllegalArgumentException(
+          "clientCertPath and clientKeyPath must be set together")
+      case _ => ()
+    }
+    (cert.toSeq ++ key.toSeq).foreach { p =>
+      if (!new java.io.File(p).isFile)
+        throw new IllegalArgumentException(
+          s"TLS credential file does not exist: $p")
+    }
+    val verify = option("sslVerify") match {
+      case None => true
+      case Some(v) if v.equalsIgnoreCase("true") => true
+      case Some(v) if v.equalsIgnoreCase("false") => false
+      case Some(v) => throw new IllegalArgumentException(
+        s"sslVerify must be true or false, got '$v'")
+    }
+    PointsTlsConf(cert, key, verify)
+  }
+}
+
 /** Live-endpoint delivery policy (set ⇔ `endpointUrl` given):
   * batches of `batchRows` lines per POST (the batch shape of the
   * reference client's `write_points(batch_size=...)`), with the
@@ -151,6 +188,14 @@ case class PointsWriteConf(path: Option[String], measurement: String,
 }
 
 object PointsWriteConf {
+  /** The active session's Hadoop conf (object-store filesystems and
+    * their credentials arrive as `spark.hadoop.*` settings), resolved
+    * once on the driver per write and shipped to every task with the
+    * writer factory.
+    */
+  def sessionHadoopConf(): SerializableConfiguration =
+    new SerializableConfiguration(PlanBridge.hadoopConf(SparkSession.active))
+
   def apply(options: CaseInsensitiveStringMap,
       schema: StructType): PointsWriteConf = {
     def cols(key: String): Seq[String] =
@@ -228,39 +273,14 @@ object PointsWriteConf {
       cols("fieldCols").map(c =>
         (c, idx(c), schema(c).dataType)),
       idx(timeCol), schema(timeCol).dataType,
-      tlsConf(options), endpoint, timePrecision)
-  }
-
-  /** Build-time validation of the TLS/auth option surface: cert and
-    * key must come together (the reference passes them as a pair),
-    * named files must exist, and the verify flag must parse.
-    */
-  private def tlsConf(options: CaseInsensitiveStringMap): PointsTlsConf = {
-    val cert = Option(options.get("clientCertPath")).filter(_.nonEmpty)
-    val key = Option(options.get("clientKeyPath")).filter(_.nonEmpty)
-    (cert, key) match {
-      case (Some(_), None) | (None, Some(_)) =>
-        throw new IllegalArgumentException(
-          "clientCertPath and clientKeyPath must be set together")
-      case _ => ()
-    }
-    (cert.toSeq ++ key.toSeq).foreach { p =>
-      if (!new java.io.File(p).isFile)
-        throw new IllegalArgumentException(
-          s"TLS credential file does not exist: $p")
-    }
-    val verify = Option(options.get("sslVerify")) match {
-      case None => true
-      case Some(v) if v.equalsIgnoreCase("true") => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"sslVerify must be true or false, got '$v'")
-    }
-    PointsTlsConf(cert, key, verify)
+      PointsTlsConf.fromOptions(k => Option(options.get(k))), endpoint,
+      timePrecision)
   }
 }
 
-class PointsBatchWrite(conf: PointsWriteConf, truncateFirst: Boolean)
+class PointsBatchWrite(conf: PointsWriteConf, truncateFirst: Boolean,
+    hadoopConf: SerializableConfiguration =
+      PointsWriteConf.sessionHadoopConf())
     extends BatchWrite {
 
   // published names carry a per-JOB id, not the winning attempt's
@@ -271,14 +291,14 @@ class PointsBatchWrite(conf: PointsWriteConf, truncateFirst: Boolean)
 
   private def fs(): (FileSystem, Path) = {
     val p = new Path(conf.dir)
-    (p.getFileSystem(new org.apache.hadoop.conf.Configuration()), p)
+    (p.getFileSystem(hadoopConf.value), p)
   }
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
     val (f, root) = fs()
     f.mkdirs(new Path(root, "_staging"))
-    new PointsWriterFactory(conf)
+    new PointsWriterFactory(conf, hadoopConf)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -323,11 +343,12 @@ class PointsBatchWrite(conf: PointsWriteConf, truncateFirst: Boolean)
   }
 }
 
-class PointsWriterFactory(conf: PointsWriteConf)
-    extends DataWriterFactory {
+class PointsWriterFactory(conf: PointsWriteConf,
+    hadoopConf: SerializableConfiguration) extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new PointsDataWriter(conf, partitionId, taskId, stagingSub = "")
+    new PointsDataWriter(conf, hadoopConf, partitionId, taskId,
+      stagingSub = "")
 }
 
 /** Streaming form of the commit protocol (§2.9 sink side): each epoch
@@ -344,21 +365,24 @@ class PointsWriterFactory(conf: PointsWriteConf)
   * reference approximates with its payload-snapshot dedup
   * (`extract.py:14-17,115-132`), here enforced by the sink itself.
   */
-class PointsStreamingWriterFactory(conf: PointsWriteConf)
+class PointsStreamingWriterFactory(conf: PointsWriteConf,
+    hadoopConf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new PointsDataWriter(conf, partitionId, taskId,
+    new PointsDataWriter(conf, hadoopConf, partitionId, taskId,
       stagingSub = s"epoch-$epochId/")
 }
 
-class PointsStreamingWrite(conf: PointsWriteConf)
+class PointsStreamingWrite(conf: PointsWriteConf,
+    hadoopConf: SerializableConfiguration =
+      PointsWriteConf.sessionHadoopConf())
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
   private def fs(): (FileSystem, Path) = {
     val p = new Path(conf.dir)
-    (p.getFileSystem(new org.apache.hadoop.conf.Configuration()), p)
+    (p.getFileSystem(hadoopConf.value), p)
   }
 
   override def createStreamingWriterFactory(
@@ -367,7 +391,7 @@ class PointsStreamingWrite(conf: PointsWriteConf)
     f.mkdirs(new Path(root, "_staging"))
     // named top-level factory: an anonymous class here would capture
     // this (non-serializable) StreamingWrite as its $outer
-    new PointsStreamingWriterFactory(conf)
+    new PointsStreamingWriterFactory(conf, hadoopConf)
   }
 
   override def commit(epochId: Long,
@@ -520,15 +544,15 @@ private[points] final class PointsLineRenderer(conf: PointsWriteConf)
   }
 }
 
-class PointsDataWriter(conf: PointsWriteConf, partitionId: Int,
+class PointsDataWriter(conf: PointsWriteConf,
+    hadoopConf: SerializableConfiguration, partitionId: Int,
     taskId: Long, stagingSub: String) extends DataWriter[InternalRow] {
 
   // attempt identity in the name: retried/speculative attempts of the
   // same partition write DIFFERENT files
   private val staged = new Path(
     s"${conf.dir}/_staging/${stagingSub}part-$partitionId-$taskId.lp")
-  private val fsys = staged.getFileSystem(
-    new org.apache.hadoop.conf.Configuration())
+  private val fsys = staged.getFileSystem(hadoopConf.value)
   private val out = new java.io.BufferedWriter(
     new java.io.OutputStreamWriter(fsys.create(staged, true), "UTF-8"))
   private var rows = 0L

@@ -76,9 +76,10 @@ object PointsHttpTransport {
     })
 
   /** None when the conf needs nothing beyond the JVM defaults (no
-    * client credentials, verification on).
+    * client credentials, verification on). Shared with the REST
+    * source's `HttpTransport`.
     */
-  private[points] def sslContextFor(tls: PointsTlsConf): Option[SSLContext] = {
+  private[sources] def sslContextFor(tls: PointsTlsConf): Option[SSLContext] = {
     val kms: Array[KeyManager] = (tls.clientCertPath, tls.clientKeyPath) match {
       case (Some(cert), Some(key)) => keyManagers(cert, key)
       case _ => null

@@ -16,6 +16,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.points.{PointsHttpTransport, PointsTlsConf}
+
 /** DataSource V2 connector for the Nagios XI rrdexport API shape
   * (SURVEY §2.1 S2, §4 pushdown row): `spark.read.format("nagios-rest")
   * .option("endpointDir", dir).load()`.
@@ -45,7 +47,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * live API once per (host, service) pair of the inventory-derived
   * fetch list. Options: `transportClass`, `maxRetries` (default 3),
   * `timeoutMs` (default 30000), `backoffMs` (default 100), `mode`
-  * (`failfast` default | `permissive`).
+  * (`failfast` default | `permissive`), and for HTTPS endpoints
+  * `sslVerify` (default true) and a PEM client cert/key pair
+  * `clientCertPath` + `clientKeyPath` — the reference's `verify=`
+  * and `cert=` (`extract.py:72`, `url...py:40-41`), validated when
+  * the table is built, as the points sink does.
   *
   * Failure policy (`mode`): the reference logs an HTTP error for one
   * (host, service) and continues the extract with the rest
@@ -109,7 +115,8 @@ class NagiosRestSource extends TableProvider
       opt("timeoutMs").map(_.toLong).getOrElse(30000L),
       opt("backoffMs").map(_.toLong).getOrElse(100L),
       opt("apiKey").filter(_.nonEmpty),
-      NagiosRestSource.parseMode(opt("mode"))))
+      NagiosRestSource.parseMode(opt("mode")),
+      PointsTlsConf.fromOptions(opt)))
   }
 }
 
@@ -127,10 +134,12 @@ case class RestEndpoints(dir: Option[String], url: Option[String],
   * set, rides every request as the `apikey` query param — the
   * reference embeds it in each URL (`extract.py:33,71`); here it is a
   * connector option so the task list and logs stay credential-free.
+  * `tls` is the HTTPS client surface (verify flag, client cert/key).
   */
 case class RestTransportConf(transportClass: String, maxRetries: Int,
     timeoutMs: Long, backoffMs: Long, apiKey: Option[String] = None,
-    permissive: Boolean = false)
+    permissive: Boolean = false,
+    tls: PointsTlsConf = PointsTlsConf.default)
 
 /** One request attempt. Implementations must have a zero-arg
   * constructor (instantiated by class name on the executor) and should
@@ -142,14 +151,15 @@ case class RestTransportConf(transportClass: String, maxRetries: Int,
 trait RestTransport extends Serializable {
   def fetch(url: String, params: Map[String, String]): RestResponse
 
-  /** Deadline-aware variant the guard actually calls: transports that
-    * can enforce a timeout internally (HTTP connect/read) override
-    * this so the configured `timeoutMs` reaches the client instead of
-    * a hardcoded default; everything else inherits the plain fetch
-    * and relies on the guard's outer deadline thread alone.
+  /** The variant the guard actually calls: transports that can
+    * enforce a timeout internally (HTTP connect/read) or speak TLS
+    * override this so the configured `timeoutMs` and `tls` reach the
+    * client instead of hardcoded defaults; everything else inherits
+    * the plain fetch and relies on the guard's outer deadline thread
+    * alone.
     */
   def fetch(url: String, params: Map[String, String],
-      timeoutMs: Long): RestResponse = fetch(url, params)
+      conf: RestTransportConf): RestResponse = fetch(url, params)
 }
 
 final case class RestResponse(status: Int, body: String)
@@ -184,17 +194,24 @@ class FileTransport extends RestTransport {
   * the attempt from the inside too, instead of pinning the guard's
   * deadline thread for the duration.
   *
-  * The client is one JVM-wide instance (connection pooling across the
-  * executor's tasks — the fleet-fetch shape of `extract.py:150`'s
-  * thread pool); instances of this class are stateless shims around
-  * it, cheap to construct per task by class name.
+  * The client is one JVM-wide instance per TLS configuration
+  * (connection pooling across the executor's tasks — the fleet-fetch
+  * shape of `extract.py:150`'s thread pool); instances of this class
+  * are stateless shims around it, cheap to construct per task by
+  * class name. TLS is the points sink's: `sslVerify=false` trusts a
+  * self-signed endpoint, a client cert/key pair presents itself for
+  * mutual TLS (`PointsHttpTransport.sslContextFor`).
   */
 class HttpTransport extends RestTransport {
   override def fetch(url: String, params: Map[String, String]): RestResponse =
     fetch(url, params, 30000L)
 
   override def fetch(url: String, params: Map[String, String],
-      timeoutMs: Long): RestResponse = {
+      conf: RestTransportConf): RestResponse =
+    fetch(url, params, conf.timeoutMs, conf.tls)
+
+  def fetch(url: String, params: Map[String, String], timeoutMs: Long,
+      tls: PointsTlsConf = PointsTlsConf.default): RestResponse = {
     def enc(s: String): String =
       java.net.URLEncoder.encode(s, "UTF-8")
     // deterministic param order: a stable query string makes request
@@ -207,18 +224,24 @@ class HttpTransport extends RestTransport {
     val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(full))
       .timeout(java.time.Duration.ofMillis(math.max(1L, timeoutMs)))
       .GET().build()
-    val resp = HttpTransport.client.send(req,
+    val resp = HttpTransport.clientFor(tls).send(req,
       java.net.http.HttpResponse.BodyHandlers.ofString())
     RestResponse(resp.statusCode(), resp.body())
   }
 }
 
 object HttpTransport {
-  private lazy val client: java.net.http.HttpClient =
-    java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(30))
-      .followRedirects(java.net.http.HttpClient.Redirect.NORMAL)
-      .build()
+  private val clients = new java.util.concurrent.ConcurrentHashMap[
+    PointsTlsConf, java.net.http.HttpClient]()
+
+  private def clientFor(tls: PointsTlsConf): java.net.http.HttpClient =
+    clients.computeIfAbsent(tls, { conf =>
+      val b = java.net.http.HttpClient.newBuilder()
+        .connectTimeout(java.time.Duration.ofSeconds(30))
+        .followRedirects(java.net.http.HttpClient.Redirect.NORMAL)
+      PointsHttpTransport.sslContextFor(conf).foreach(b.sslContext)
+      b.build()
+    })
 }
 
 object RestTransport {
@@ -242,7 +265,7 @@ object RestTransport {
       if (attempt > 0 && conf.backoffMs > 0)
         Thread.sleep(conf.backoffMs * (1L << math.min(attempt - 1, 6)))
       try {
-        val resp = fetchWithDeadline(base, url, params, conf.timeoutMs)
+        val resp = fetchWithDeadline(base, url, params, conf)
         if (resp.status >= 200 && resp.status < 300) return resp.body
         else if (resp.status >= 400 && resp.status < 500)
           throw new RestRequestException(
@@ -266,7 +289,8 @@ object RestTransport {
     * client (connect/read), making this the outer bound.
     */
   private def fetchWithDeadline(base: RestTransport, url: String,
-      params: Map[String, String], timeoutMs: Long): RestResponse = {
+      params: Map[String, String], conf: RestTransportConf): RestResponse = {
+    val timeoutMs = conf.timeoutMs
     val ex = java.util.concurrent.Executors.newSingleThreadExecutor(
       (r: Runnable) => {
         val t = new Thread(r, "graft-rest-fetch"); t.setDaemon(true); t
@@ -274,7 +298,7 @@ object RestTransport {
     try {
       val fut = ex.submit(new java.util.concurrent.Callable[RestResponse] {
         override def call(): RestResponse =
-          base.fetch(url, params, timeoutMs)
+          base.fetch(url, params, conf)
       })
       try fut.get(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
       catch {

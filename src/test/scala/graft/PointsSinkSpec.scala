@@ -6,6 +6,32 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
+/** A local filesystem that counts the staged files it creates and the
+  * renames it makes; reached only through a conf naming it as
+  * `fs.file.impl`.
+  */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def create(f: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    if (f.toString.contains("/_staging/"))
+      CountingLocalFs.stagedCreates.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    CountingLocalFs.renames.incrementAndGet()
+    super.rename(src, dst)
+  }
+}
+object CountingLocalFs {
+  val stagedCreates = new java.util.concurrent.atomic.AtomicInteger(0)
+  val renames = new java.util.concurrent.atomic.AtomicInteger(0)
+}
+
 /** DSv2 exactly-once point sink (K5 engine form): staged-file commit
   * protocol, line-protocol rendering, abort-publishes-nothing.
   */
@@ -61,6 +87,26 @@ class PointsSinkSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(dir, "_staging")))
     val manifest = Files.readString(Paths.get(dir, "_SUCCESS"))
     assert(manifest == """{"rows":3}""")
+  }
+
+  test("file mode resolves the session's Hadoop conf: task writers " +
+      "and the driver commit go through its filesystem") {
+    val dir = tmpDir()
+    val (creates0, renames0) =
+      (CountingLocalFs.stagedCreates.get(), CountingLocalFs.renames.get())
+    spark.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try write(points.repartition(2), dir)
+    finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+    assert(published(dir).size == 3)
+    // one staged file per task, one rename per non-empty partition
+    assert(CountingLocalFs.stagedCreates.get() - creates0 == 2)
+    val parts = Files.list(Paths.get(dir)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".lp"))
+    assert(CountingLocalFs.renames.get() - renames0 == parts)
   }
 
   test("newlines in values cannot break line framing (one point = one line)") {

@@ -264,10 +264,26 @@ class RestSourceSpec extends SparkSpec {
     * request's decoded query params. Stopped before the test returns.
     */
   private def withServer(
-      handler: (String, Map[String, String]) => (Int, String))(
+      handler: (String, Map[String, String]) => (Int, String),
+      tls: Option[javax.net.ssl.SSLContext] = None)(
       f: String => Unit): Unit = {
-    val srv = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val addr = new java.net.InetSocketAddress("127.0.0.1", 0)
+    val srv = tls match {
+      case None => com.sun.net.httpserver.HttpServer.create(addr, 0)
+      case Some(ctx) =>
+        val s = com.sun.net.httpserver.HttpsServer.create(addr, 0)
+        s.setHttpsConfigurator(
+          new com.sun.net.httpserver.HttpsConfigurator(ctx) {
+            override def configure(
+                p: com.sun.net.httpserver.HttpsParameters): Unit = {
+              // mutual TLS: certless clients are refused
+              val sp = ctx.getDefaultSSLParameters
+              sp.setNeedClientAuth(true)
+              p.setSSLParameters(sp)
+            }
+          })
+        s
+    }
     srv.createContext("/", { (ex: com.sun.net.httpserver.HttpExchange) =>
       val q = Option(ex.getRequestURI.getRawQuery).getOrElse("")
       val params = q.split("&").filter(_.nonEmpty).map { kv =>
@@ -285,7 +301,8 @@ class RestSourceSpec extends SparkSpec {
     // default same-thread executor would serialize behind a hung task
     srv.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
     srv.start()
-    try f(s"http://127.0.0.1:${srv.getAddress.getPort}")
+    val scheme = if (tls.isDefined) "https" else "http"
+    try f(s"$scheme://127.0.0.1:${srv.getAddress.getPort}")
     finally srv.stop(0)
   }
 
@@ -406,6 +423,63 @@ class RestSourceSpec extends SparkSpec {
         dead.head.getString(4).contains("client error 404"),
         got.mkString("\n"))
     }
+  }
+
+  test("endpointUrl mode over TLS: client cert presented, self-signed " +
+      "server accepted with sslVerify=false (extract.py:72)") {
+    import java.security.KeyStore
+    import javax.net.ssl.{KeyManagerFactory, SSLContext, TrustManagerFactory}
+    def store(resource: String): KeyStore = {
+      val ks = KeyStore.getInstance("PKCS12")
+      val in = getClass.getResourceAsStream(resource)
+      try ks.load(in, "changeit".toCharArray) finally in.close()
+      ks
+    }
+    val kmf = KeyManagerFactory.getInstance(
+      KeyManagerFactory.getDefaultAlgorithm)
+    kmf.init(store("/tls/server.p12"), "changeit".toCharArray)
+    val tmf = TrustManagerFactory.getInstance(
+      TrustManagerFactory.getDefaultAlgorithm)
+    tmf.init(store("/tls/clienttrust.p12")) // trusts only client.crt
+    val ctx = SSLContext.getInstance("TLS")
+    ctx.init(kmf.getKeyManagers, tmf.getTrustManagers, null)
+    def resPath(r: String): String =
+      java.nio.file.Paths.get(getClass.getResource(r).toURI).toString
+    val cert = "clientCertPath" -> resPath("/tls/client.crt")
+    val key = "clientKeyPath" -> resPath("/tls/client.key")
+    withServer({ (_, _) =>
+      (200, """{"data":{"row":[{"t":"1723402800","v":"4.2"}]}}""")
+    }, Some(ctx)) { base =>
+      def read(opts: (String, String)*) =
+        spark.read.format("nagios-rest")
+          .option("endpointUrl", s"$base/rrdexport")
+          .option("hostServices", "web01:CPU Usage;web02:CPU Usage")
+          .option("maxRetries", "0")
+          .options(opts.toMap)
+          .load()
+      val got = read(cert, key, "sslVerify" -> "false").collect()
+      assert(got.map(_.getString(0)).toSet == Set("web01", "web02"))
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil else String.valueOf(t.getMessage) +: messages(t.getCause)
+      // no client cert: the server refuses the handshake
+      val noCert = intercept[Exception] {
+        read("sslVerify" -> "false").collect()
+      }
+      assert(messages(noCert).exists(_.contains("failed after 1 attempts")),
+        messages(noCert).mkString(" | "))
+      // verification on (the default) rejects the self-signed server
+      val verified = intercept[Exception] { read(cert, key).collect() }
+      assert(messages(verified).exists(_.contains("failed after 1 attempts")),
+        messages(verified).mkString(" | "))
+    }
+    // the pair is validated when the table is built
+    val half = intercept[IllegalArgumentException] {
+      spark.read.format("nagios-rest")
+        .option("endpointUrl", "https://127.0.0.1:1/rrdexport")
+        .option("hostServices", "web01:CPU Usage")
+        .option(cert._1, cert._2).load()
+    }
+    assert(half.getMessage.contains("must be set together"))
   }
 
   test("endpointUrl mode requires the inventory-derived task list") {
