@@ -398,40 +398,20 @@ object SparkEntry {
       Dedup.repeatedSpans(substrCorpus(s, dir), "doc_id", "text", k = 8)
         .localCheckpoint(true))
 
-  /** The full §3.1 metrics ETL in one plan (the flagship pipeline
-    * query, `q_metrics_etl` at the reference's 25-host fan-out):
-    * events are reshaped into the REST response-document form the
-    * connector would deliver (one JSON body per (host, service) via a
-    * groupBy collect_list), then melt → parse-guard → anti-join dedup
-    * → family routing. Every melt/dedup branch re-derives points from
-    * the grouped responses, but the groupBy EXCHANGE is reused across
-    * branches, so each branch re-parses only the post-shuffle body
-    * rows (measured cheaper than caching the exploded point relation
-    * and re-scanning it per branch).
-    *
-    * `hosts` is the scale axis: a real deployment grows by monitoring
-    * MORE HOSTS (more, similarly-sized response documents), not by
-    * packing 10× the points into each document. Documents are built
-    * per (host, service, FETCH WINDOW) — rrdexport responses cover a
-    * bounded 25 h span (`extract.py:29-31`, `url...py:49`), so a
-    * document's size is capped by the window's sample budget no
-    * matter how long the corpus runs, and the parse stage
-    * parallelizes over document count instead of funneling a giant
-    * collect_list row per host. (Output-invariant: document
-    * boundaries are internal — the melt explodes the same points.)
-    * ScaleProbe exercises the hosts axis and the replication axis;
-    * the latter packs 10× the samples into a fixed time range, which
-    * grows each window's document 10× BY CONSTRUCTION (a 10×-rate
-    * poller, not a monitoring deployment) — attribution in
-    * BASELINE.md.
+  /** Deterministic rrdexport response documents over the events
+    * table, each event's host `host<user_id % hosts>`: per (host, 25h
+    * fetch window) one CPU doc (scalar v, NaN every 97th point) and one
+    * Swap doc (3-element list v, garbage every 89th) — the metricsEtl
+    * corpus shape, shared by the flagship query and the end-to-end job
+    * tick.
     */
-  /** Deterministic rrdexport response documents over a prepared
-    * (event_id, host_name, epoch) frame: per (host, 25h fetch window)
-    * one CPU doc (scalar v, NaN every 97th point) and one Swap doc
-    * (3-element list v, garbage every 89th) — the metricsEtl corpus
-    * shape, shared by the flagship query and the end-to-end job tick.
-    */
-  private def syntheticResponses(ev: DataFrame): DataFrame = {
+  private def syntheticResponses(s: SparkSession, dir: String,
+      hosts: Int): DataFrame = {
+    val ev = Tables.events(s, dir).select(
+      col("event_id"),
+      concat(lit("host"), (col("user_id") % hosts).cast("string"))
+        .as("host_name"),
+      unix_timestamp(col("ts")).as("epoch"))
     def dd(m: Column): Column = format_string("%d.%02d",
       floor(m / 100).cast("long"), (m % 100).cast("long"))
     val cpuV = when(col("event_id") % 97 === 0, lit("NaN"))
@@ -471,14 +451,8 @@ object SparkEntry {
     * staged as JSON (corpus prep, not job time). */
   private[graft] def etlJobInput(s: SparkSession, dir: String,
       hosts: Int): String =
-    Staged.onDisk(s, s"etljob_in_$hosts", dir) { inDir =>
-      val ev = Tables.events(s, dir).select(
-        col("event_id"),
-        concat(lit("host"), (col("user_id") % hosts).cast("string"))
-          .as("host_name"),
-        unix_timestamp(col("ts")).as("epoch"))
-      syntheticResponses(ev).write.mode("overwrite").json(inDir)
-    }
+    Staged.onDisk(s, s"etljob_in_$hosts", dir)(inDir =>
+      syntheticResponses(s, dir, hosts).write.mode("overwrite").json(inDir))
 
   /** The committed §3.1 cron-tick job end to end (VERDICT r9 task 7):
     * ONE AvailableNow tick over [[etlJobInput]] — stream read →
@@ -497,16 +471,37 @@ object SparkEntry {
     s.read.parquet(s"$base/out/data")
   }
 
+  /** The full §3.1 metrics ETL in one plan (the flagship pipeline
+    * query, `q_metrics_etl` at the reference's 25-host fan-out):
+    * events are reshaped into the REST response-document form the
+    * connector would deliver (one JSON body per (host, service) via a
+    * groupBy collect_list), then melt → parse-guard → anti-join dedup
+    * → family routing. Every melt/dedup branch re-derives points from
+    * the grouped responses, but the groupBy EXCHANGE is reused across
+    * branches, so each branch re-parses only the post-shuffle body
+    * rows (measured cheaper than caching the exploded point relation
+    * and re-scanning it per branch).
+    *
+    * `hosts` is the scale axis: a real deployment grows by monitoring
+    * MORE HOSTS (more, similarly-sized response documents), not by
+    * packing 10× the points into each document. Documents are built
+    * per (host, service, FETCH WINDOW) — rrdexport responses cover a
+    * bounded 25 h span (`extract.py:29-31`, `url...py:49`), so a
+    * document's size is capped by the window's sample budget no
+    * matter how long the corpus runs, and the parse stage
+    * parallelizes over document count instead of funneling a giant
+    * collect_list row per host. (Output-invariant: document
+    * boundaries are internal — the melt explodes the same points.)
+    * ScaleProbe exercises the hosts axis and the replication axis;
+    * the latter packs 10× the samples into a fixed time range, which
+    * grows each window's document 10× BY CONSTRUCTION (a 10×-rate
+    * poller, not a monitoring deployment) — attribution in
+    * BASELINE.md.
+    */
   def metricsEtl(s: SparkSession, dir: String, hosts: Int): DataFrame = {
     import graft.pipelines.HostMetrics
-    val ev = Tables.events(s, dir).select(
-      col("event_id"),
-      concat(lit("host"), (col("user_id") % hosts).cast("string"))
-        .as("host_name"),
-      unix_timestamp(col("ts")).as("epoch"))
-    def dd(m: Column): Column = format_string("%d.%02d",
-      floor(m / 100).cast("long"), (m % 100).cast("long"))
-    val points = HostMetrics.flattenResponses(syntheticResponses(ev))
+    val points = HostMetrics.flattenResponses(
+      syntheticResponses(s, dir, hosts))
     val payload = HostMetrics.longPayload(points,
       Seq("CPU Usage", "Swap Usage"))
     // previous run's payload = the three already-loaded hosts; the
@@ -697,10 +692,10 @@ object SparkEntry {
   /** Staged minhash band keys for the history corpus, written to
     * parquet once per (session, corpus version) — the 100 TB operating
     * mode, where re-ingest probes staged buckets instead of re-hashing
-    * the corpus, so min-of-N measures the steady-state probe. Each
-    * build writes a fresh path, so memoRead is safe on it (no per-call
-    * footer/partition-discovery metadata jobs). The parquet stagings
-    * below follow the same rule.
+    * the corpus, so min-of-N measures the steady-state probe. memoRead
+    * serves the staged path's relation, so no call after the first
+    * pays the footer/partition-discovery metadata jobs. The parquet
+    * stagings below follow the same rule.
     */
   private[graft] def stagedHistoryBands(s: SparkSession,
       dir: String): DataFrame =

@@ -88,23 +88,6 @@ object ScalarOps {
       parseRound2(try_element_at(valueArray, lit(i + 1))).as(k)
     }
 
-  /** F11 — canonical row-identity key (`extract.py:119,127`): the
-    * reference serializes the whole row with sorted keys; here the
-    * column-order-insensitive equivalent hashes name-sorted columns to
-    * 256 bits. Used when a compact key is preferable to whole-row
-    * comparison (e.g. streaming dedup state at 100 TB, SURVEY §7.4.3).
-    *
-    * Values are cast to string and joined with a field separator, with
-    * an explicit null sentinel (a bare `concat_ws` SKIPS nulls, which
-    * would conflate (null,"a") with ("a",null)). All codegen'd — the
-    * `sha2(to_json(struct))` formulation goes through CodegenFallback
-    * and knocked the whole map stage out of whole-stage codegen.
-    */
-  def canonicalRowKey(cols: Seq[String]): Column =
-    sha2(concat_ws("\u0001",
-      cols.sorted.map(c =>
-        coalesce(col(c).cast("string"), lit("\u0002NULL"))): _*), 256)
-
   /** F12 — rolling extraction window lower bound: now − `hours` as
     * epoch seconds (`extract.py:28-31`; 25 h for a 24 h cadence = 1 h
     * deliberate overlap).

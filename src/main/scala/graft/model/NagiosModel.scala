@@ -41,21 +41,6 @@ object NagiosModel {
     "Disk Usage apps", "Disk Usage boot", "Disk Usage opt",
     "Disk Usage var", "Disk Usage home", "CPU Usage")
 
-  /** The identity columns of every metric row (`extract.py:78`). */
-  val identityCols: Seq[String] = Seq("host_name", "timestamp", "service_name")
-
-  /** Full per-family schema: identity columns + registry value columns,
-    * each value a 2-dp-rounded nullable double (`extract.py:53-61`).
-    */
-  def familySchema(service: String): StructType = {
-    val id = Seq(
-      StructField("host_name", StringType, nullable = false),
-      StructField("timestamp", StringType, nullable = false),
-      StructField("service_name", StringType, nullable = false))
-    StructType(id ++ serviceKeys(service).map(k =>
-      StructField(k, DoubleType, nullable = true)))
-  }
-
   /** Metric families routed to physical tables by substring match on the
     * lower-cased service name (`load_to_db.py:34-36`): table
     * `host_{family}_usage`.
@@ -82,19 +67,6 @@ object NagiosModel {
   /** Status text → numeric (`url...py:32-37`); default −1 (`:108`). */
   val statusNumericMap: Map[String, Int] = Map(
     "OK" -> 0, "WARNING" -> 1, "CRITICAL" -> 2, "UNKNOWN" -> 3)
-
-  /** Fixed shape of an InfluxDB-bound point (`url...py:110-123`):
-    * string tags (dimensions), typed fields (measures), epoch time.
-    */
-  case class StatusPoint(
-      measurement: String,
-      service_description: String,
-      display_name: String,
-      friendlyname: String,
-      crownjewel: String,
-      service_status: String,
-      service_status_numeric: Int,
-      time: Long)
 
   /** Host inventory row (`hosts_to_csv.py:24`). */
   case class HostRow(host_name: String, host_group: String)

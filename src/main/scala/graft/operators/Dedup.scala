@@ -1342,23 +1342,20 @@ object Dedup {
     * corpus never shuffles its text. The only exchanges carry
     * (id, count) for documents with at least one hit, and the final
     * enrich join's build side is that same small hit set (AQE
-    * broadcasts it). Set `broadcastEval = false` if the eval side ever
-    * outgrows the broadcast budget — the same plan runs as a shuffle
-    * semi-join.
+    * broadcasts it). An eval set past the broadcast budget takes
+    * [[contaminationReportBloom]].
     */
   def contaminationReport(docs: DataFrame, evalDocs: DataFrame,
-      idCol: String, textCol: String, k: Int = 5,
-      broadcastEval: Boolean = true): DataFrame = {
+      idCol: String, textCol: String, k: Int = 5): DataFrame = {
     val docSh = docs.select(col(idCol),
       explode(array_distinct(TextOps.shingles(col(textCol), k)))
         .as("__sh"))
     val evalSh = evalDocs.select(
       explode(array_distinct(TextOps.shingles(col(textCol), k)))
         .as("__sh")).distinct()
-    val evalSide = if (broadcastEval) broadcast(evalSh) else evalSh
     // docSh is distinct per doc, so the semi-join survivor count IS
     // the distinct overlapping-shingle count
-    val hits = docSh.join(evalSide, Seq("__sh"), "left_semi")
+    val hits = docSh.join(broadcast(evalSh), Seq("__sh"), "left_semi")
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_eval_hits"))
     docs.select(col(idCol)).join(hits, Seq(idCol), "left")
       .select(col(idCol),

@@ -101,10 +101,6 @@ object Relational {
     hosts.withColumn(outCol,
       explode(array(services.map(lit): _*)))
 
-  /** P1/P2 — IN-list filter (`extract.py:140`, `hosts_to_csv.py:40`). */
-  def inListFilter(df: DataFrame, c: String, values: Seq[String]): DataFrame =
-    df.filter(col(c).isin(values: _*))
-
   /** P3 — completeness gate (`extract.py:95-99`): drop any row with a
     * null (or NaN, already normalized to null by F1) in any column.
     * The reference also logs rejects; [[deadLetterSplit]] exposes that
@@ -221,13 +217,15 @@ object Relational {
     * subsequent equi-joins/aggregations on `keys` between tables with
     * matching bucket counts plan with NO exchange — the standard
     * co-location strategy for repeatedly-joined 100 TB fact tables.
+    * The table is external, its files at `path`.
     */
   def writeBucketed(df: DataFrame, table: String, keys: Seq[String],
-      numBuckets: Int): Unit =
+      numBuckets: Int, path: String): Unit =
     df.write.mode("overwrite")
       .bucketBy(numBuckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
+      .option("path", path)
       .saveAsTable(table)
 
   /** As-of join (SURVEY §2.4 extension): for each probe row, attach

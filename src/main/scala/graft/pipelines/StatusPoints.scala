@@ -1,12 +1,11 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 import graft.functions.ScalarOps
-import graft.model.NagiosModel.StatusPoint
 import graft.operators.Relational
 
 /** Pipeline §3.2 — service status → tagged time-series points
@@ -90,16 +89,6 @@ object StatusPoints {
         col("time")))
   }
 
-  /** Typed view of the point stream (fixed shape ⇒ Dataset[T]). */
-  def typedPoints(df: DataFrame)(implicit s: SparkSession): Dataset[StatusPoint] = {
-    import s.implicits._
-    df.select(col("measurement"), col("service_description"),
-        col("display_name"), col("friendlyname"), col("crownjewel"),
-        col("service_status"),
-        col("service_status_numeric").cast("int"), col("time"))
-      .as[StatusPoint]
-  }
-
   /** K3 — the 4-column CSV audit projection (`url...py:80,128-133`),
     * taken off the [[points]] frame. Written after the point sink, it
     * reads the partitions that write stored: no input scan and no
@@ -108,40 +97,4 @@ object StatusPoints {
   def auditRows(points: DataFrame): DataFrame =
     points.select("host_name", "service_description", "friendlyname",
       "crownjewel")
-
-  /** K5 — partition-parallel point sink. The reference writes via one
-    * InfluxDB client (`url...py:141-159`); the engine opens one client
-    * per partition inside `foreachPartition` so writes scale with the
-    * cluster, `writeFn` abstracting the actual client (tested with a
-    * collector; production would wrap an HTTP line-protocol client).
-    */
-  def sinkPoints(points: Dataset[StatusPoint])(
-      writeFn: Iterator[StatusPoint] => Unit): Unit =
-    points.foreachPartition(writeFn)
-
-  /** Raised by [[sinkPoints]]'s precondition check before any
-    * partition work — the typed form of the reference's fail-fast when
-    * the target database is missing (`url...py:151-152`).
-    */
-  class SinkPreconditionException(msg: String)
-    extends RuntimeException(msg)
-
-  /** K5 with the reference's DB-exists precondition: `listDatabases`
-    * is one driver-side metadata call against the target store (the
-    * Influx `SHOW DATABASES` equivalent); a missing database fails the
-    * job with a typed error BEFORE any executor opens a client or
-    * sends a point — a misconfigured target must not surface as
-    * thousands of per-partition write failures.
-    */
-  def sinkPoints(points: Dataset[StatusPoint], database: String,
-      listDatabases: () => Set[String])(
-      writeFn: Iterator[StatusPoint] => Unit): Unit = {
-    val existing = listDatabases()
-    if (!existing.contains(database))
-      throw new SinkPreconditionException(
-        s"target database '$database' does not exist " +
-          s"(available: ${existing.toSeq.sorted.mkString(", ")}); " +
-          "create it before writing")
-    points.foreachPartition(writeFn)
-  }
 }

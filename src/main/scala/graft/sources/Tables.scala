@@ -8,48 +8,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (column pruning → `ReadSchema`, predicate pushdown → `PushedFilters`,
   * partition pruning) all apply — SURVEY §4's pushdown rewrites come for
   * free as long as nothing opaque sits between the scan and the filters.
+  * Every read is served from `graft.Staged`, keyed by the path's
+  * version, so a table rewritten in place is read again.
   */
 object Tables {
-  /** One analyzed DataFrame per (session, dir, table): `read.parquet`
-    * re-infers the schema from file footers on EVERY call — a metadata
-    * job whose cost is pure waste for the harness's immutable testdata
-    * and which a slow-IO host turns into a per-query stall (observed:
-    * a 0.1 s query spending minutes in footer reads during a host IO
-    * degradation). The memo pins the footer read to once per session,
-    * exactly like a catalog table's relation cache. Testdata dirs are
-    * immutable for a session's lifetime; anything mutable must go
-    * through `spark.read` directly.
+  /** Parquet read served once per (session, path, version of the path)
+    * from `graft.Staged`: `read.parquet` re-infers the schema from file
+    * footers on EVERY call, a metadata job that a slow-IO host turns
+    * into a per-query stall (observed: a 0.1 s query spending minutes
+    * in footer reads during a host IO degradation). A rewrite of the
+    * path (a file's length or mtime, a dir's file listing) changes its
+    * version, so the next call reads it again and the superseded
+    * relation is dropped. A read is not a staging: it records no
+    * consumer.
     */
-  private val loadMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  def memoRead(spark: SparkSession, path: String): DataFrame =
+    graft.Staged.cell(spark, "parquet", path)(spark.read.parquet(path))
 
-  /** Memoized immutable-path parquet read (see [[loadImmutable]]'s rationale).
-    * Only for paths whose content never changes within a session —
-    * testdata tables and version-tagged staging dirs qualify; anything
-    * rewritten in place does not. Entries of stopped sessions are
-    * evicted on access, so a long-lived JVM cycling sessions (test
-    * suites, repeated bench mains) cannot leak them through the memo.
-    */
-  def memoRead(spark: SparkSession, path: String): DataFrame = {
-    val key = (spark, path)
-    val hit = loadMemo.get(key)
-    if (hit != null) return hit
-    // Miss path only: evict dead-session entries and build the
-    // DataFrame OUTSIDE any map lock — computeIfAbsent would hold the
-    // bin lock across a whole parquet footer read, serializing
-    // unrelated keys that share the bin. Two racing builders cost one
-    // duplicate read; putIfAbsent keeps the memo single-valued.
-    loadMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val built = spark.read.parquet(path)
-    val prev = loadMemo.putIfAbsent(key, built)
-    if (prev != null) prev else built
-  }
-
-  /** Memoized read of a table whose directory is NEVER rewritten in
-    * place during the session — the name is the contract. A caller
-    * with a mutable path must use `spark.read` directly, or it gets
-    * the stale memoized relation with no error.
-    */
+  /** The table `name` of `sfDir`, through [[memoRead]]. */
   def loadImmutable(spark: SparkSession, sfDir: String, name: String): DataFrame =
     memoRead(spark, s"$sfDir/$name.parquet")
 
@@ -89,41 +65,24 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = loadImmutable(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = loadImmutable(s, d, "embeddings")
 
-  /** 64-bit sha-256 tag of a path string — the shared cache/memo key
-    * encoding for per-dir derived artifacts (bucketed tables, staged
-    * band keys). A 32-bit String.hashCode collision between two dirs
-    * would silently serve one scale factor's data for another.
-    */
-  def dirTag(d: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(d.getBytes("UTF-8")).take(8)
-      .map(b => f"${b & 0xff}%02x").mkString
-
-  /** Bucketed view of a table: write-once into the session warehouse
-    * (bucketBy + sortBy on `key`), then serve from the catalog. At
-    * cluster scale the bucketed copy is the long-lived layout paid once
-    * at ingest; every subsequent equi-join/agg on `key` plans with NO
-    * exchange. The table name encodes the source dir so different SFs
-    * never alias, and the write is skipped when the table already
-    * exists (amortized across queries in one session, exactly like
-    * production).
+  /** Bucketed copy of a table (bucketBy + sortBy on `key`), built as
+    * the staging `bucketed_<name>_<key>_<buckets>` of `d`. At cluster
+    * scale the bucketed copy is the long-lived layout paid once at
+    * ingest; every subsequent equi-join/agg on `key` plans with NO
+    * exchange. Each build writes an external table with a name of its
+    * own under the session's staging root, so a new session or a
+    * rewritten table builds its own copy and never overwrites one that
+    * another session still reads; the files go when the session is
+    * released or its SparkContext stops.
     */
   def bucketed(s: SparkSession, d: String, name: String, key: String,
-      buckets: Int): DataFrame = {
-    // the memo key must cover EVERY layout-determining input — a name
-    // that omitted `key` would silently serve a table bucketed on the
-    // wrong column to the second caller
-    val table = s"graft_b_${name}_${key}_${buckets}_${dirTag(d)}"
-    if (!s.catalog.tableExists(table)) {
-      // a previous JVM may have left the managed location behind (the
-      // in-memory catalog dies with the session; its files do not)
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      graft.operators.Relational.writeBucketed(
-        loadImmutable(s, d, name), table, Seq(key), buckets)
+      buckets: Int): DataFrame =
+    graft.Staged(s, s"bucketed_${name}_${key}_$buckets", d) {
+      val table = s"graft_b_${name}_${key}_${buckets}_" +
+        java.util.UUID.randomUUID().toString.replace("-", "")
+      graft.operators.Relational.writeBucketed(loadImmutable(s, d, name),
+        table, Seq(key), buckets,
+        new java.io.File(graft.Staged.root(s), table).getPath)
+      s.table(table)
     }
-    s.table(table)
-  }
 }

@@ -56,8 +56,7 @@ class PointsEndpointBatchWrite(conf: PointsWriteConf) extends BatchWrite {
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-/** Typed fail-fast for a misconfigured endpoint target — the sink's
-  * analogue of `StatusPoints.SinkPreconditionException` (reference:
+/** Typed fail-fast for a misconfigured endpoint target (reference:
   * exits before writing when the target DB is absent,
   * `url_service_status_InfluxDB_insert.py:151-152`).
   */
@@ -67,11 +66,9 @@ class PointsPreconditionException(msg: String, cause: Throwable = null)
 /** Driver-side DB-exists precondition for endpoint mode: ONE
   * `SHOW DATABASES` probe through the SAME transport + TLS the write
   * itself will use (so the probe exercises cert/verify wiring too),
-  * before any executor renders a line. The reference's file mode
-  * equivalent lives in `StatusPoints.sinkPoints(points, database,
-  * listDatabases)`; endpoint mode previously leaned on the server's
-  * 4xx at the first batch — thousands of task failures for one
-  * driver-detectable misconfiguration.
+  * before any executor renders a line. Without it a missing database
+  * surfaces as the server's 4xx at the first batch — thousands of
+  * task failures for one driver-detectable misconfiguration.
   */
 object PointsEndpointPrecondition {
   def ensureDbExists(conf: PointsWriteConf): Unit =

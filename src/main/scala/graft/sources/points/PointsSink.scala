@@ -227,8 +227,8 @@ object PointsWriteConf {
     val requireDb = Option(options.get("requireDb")).filter(_.nonEmpty)
     if (requireDb.isDefined && endpointUrl.isEmpty)
       throw new IllegalArgumentException(
-        "requireDb applies to endpointUrl mode only (file mode has " +
-          "the StatusPoints.sinkPoints precondition overload)")
+        "requireDb applies to endpointUrl mode only (a file-mode " +
+          "write has no target database to probe)")
     val endpoint = endpointUrl.map { url =>
       def num(key: String, default: Long): Long =
         Option(options.get(key)).map(_.toLong).getOrElse(default)

@@ -16,29 +16,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `_last.txt` snapshot, `dropDuplicatesWithinWatermark` = the
   * anti-join.
   *
-  * Scale: dedup state is keyed by a 256-bit row hash, not the row
-  * payload, and the watermark bounds state retention — the two fixes
-  * SURVEY §7.4.3 calls out for the reference's O(run size) snapshot
-  * diff.
+  * Scale: the watermark bounds dedup state retention, the fix SURVEY
+  * §7.4.3 calls out for the reference's O(run size) snapshot diff.
   */
 object StreamingDedup {
 
   /** Watermarked cross-batch dedup over a streaming frame: rows that
     * re-arrive within `horizon` of the max seen event time (the
     * reference's 1 h overlap re-fetch) are emitted once. The dedup key
-    * is the full row identity (F11 canonical hash) so any re-extracted
-    * point is recognized regardless of column order.
+    * is the full row identity: the typed columns themselves, as the
+    * batch anti-join (`Relational.antiJoinDedup`) keys it, so no row
+    * hash is built. The state store compares keys by their binary
+    * form, so null matches null, `-0.0` stays apart from `0.0` and NaN
+    * matches NaN, as the reference's `json.dumps` row text does.
     */
   def dedupedStream(stream: DataFrame, tsCol: String, horizon: String)
-      : DataFrame = {
-    val cols = stream.columns.toSeq
-    stream
-      .withColumn("__row_key",
-        graft.functions.ScalarOps.canonicalRowKey(cols))
-      .withWatermark(tsCol, horizon)
-      .dropDuplicatesWithinWatermark("__row_key")
-      .drop("__row_key")
-  }
+      : DataFrame =
+    stream.withWatermark(tsCol, horizon)
+      .dropDuplicatesWithinWatermark(stream.columns.toSeq)
 
   /** Late-data gate: windowed per-key aggregation with watermarking —
     * points later than `horizon` behind the stream's max event time are

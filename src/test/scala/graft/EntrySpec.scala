@@ -46,9 +46,11 @@ class EntrySpec extends SparkSpec {
           if (n == 0) Some(name) else None
         }
     assert(empty.isEmpty, s"empty results: $empty")
-    // the staging registry derived every consumer: the 25 queries the
-    // floor's staging_dependent list once named by hand, plus the 5
-    // that list missed
+    // the staging registry derived every consumer, and no other
+    // query (a base-table read is not a staging): the 25 queries the
+    // floor's staging_dependent list once named by hand, the 5 that
+    // list missed, the 5 readers of parquet stagings, and the bucketed
+    // join, which the hand-kept list and the registry both missed
     val consumers = Set("q_triangles", "q_kcore", "q_triangles_dist",
       "q_kcore_dist", "q_pagerank", "q_personalized_pagerank",
       "q_pagerank_dist", "q_personalized_pagerank_dist", "q_theil_sen",
@@ -58,9 +60,14 @@ class EntrySpec extends SparkSpec {
       "q_minhash_pairs", "q_minhash_dedup", "q_minhash_dedup_cc",
       "q_minhash_dedup_cc_dist", "q_dup_clusters", "q_dup_representatives",
       "q_curation_v2", "q_curation_v3", "q_semdedup_pairs", "q_semdedup",
-      "q_split_leakage_safe")
-    val missed = consumers -- Staged.consumers
-    assert(missed.isEmpty, s"not recorded as staging consumers: $missed")
+      "q_split_leakage_safe", "q_minhash_incremental",
+      "q_substring_incremental", "q_entity_resolution_incremental",
+      "q_boilerplate_incremental", "q_etl_job", "q_multi_join_bucketed")
+    val names = (SparkEntry.queries ++ SparkEntry.benchOnly ++
+      SparkEntry.verifyOnly).keySet
+    val recorded = Staged.consumers & names
+    assert(recorded == consumers, s"missed: ${consumers -- recorded}, " +
+      s"over-recorded: ${recorded -- consumers}")
   }
 
   test("staging registry: a new session rebuilds its stagings, the " +
@@ -84,24 +91,94 @@ class EntrySpec extends SparkSpec {
     assert(!root.exists(), s"$root survived its session's release")
   }
 
-  test("staging registry: rewriting a table in the source dir " +
-      "rebuilds the staging instead of serving stale rows") {
+  /** A copy of sf0.001 in a temp dir, and the path of its part table. */
+  private def sfCopy(): (String, java.nio.file.Path) = {
     val copy = tempDir("graftsrc")
     new java.io.File(sf("sf0.001")).listFiles().foreach(f =>
       java.nio.file.Files.copy(f.toPath, copy.resolve(f.getName)))
-    val (dir, table) = (copy.toString, copy.resolve("part.parquet"))
+    (copy.toString, copy.resolve("part.parquet"))
+  }
+
+  /** Rewrites a single-file table in place with `rows`. */
+  private def rewriteFile(rows: org.apache.spark.sql.DataFrame,
+      table: java.nio.file.Path): Unit = {
+    val tmp = new java.io.File(table.getParent.toFile, "rewrite")
+    rows.coalesce(1).write.parquet(tmp.getPath)
+    java.nio.file.Files.move(tmp.listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath, table,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+  }
+
+  test("staging registry: rewriting a table in the source dir " +
+      "rebuilds the staging instead of serving stale rows") {
+    val (dir, table) = sfCopy()
     def rows(): Long = Staged(spark, "part_rows", dir)(
       spark.read.parquet(table.toString).count())
     val before = rows()
     // rewrite part.parquet in place with its even-keyed half
-    spark.read.parquet(table.toString).filter("p_partkey % 2 = 0")
-      .coalesce(1).write.parquet(s"$dir/rewrite")
-    java.nio.file.Files.move(new java.io.File(s"$dir/rewrite").listFiles()
-      .find(_.getName.endsWith(".parquet")).get.toPath, table,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/rewrite"))
+    rewriteFile(spark.read.parquet(table.toString)
+      .filter("p_partkey % 2 = 0"), table)
     val after = rows()
     assert(after > 0 && after < before, s"$after rows after, $before before")
+  }
+
+  test("relation cache: a table rewritten in place is read again, as a " +
+      "dir or as a single file, and a staging rebuilt on it reads the " +
+      "new rows") {
+    import graft.sources.Tables
+    val (dir, table) = sfCopy()
+    val part = Tables.part(spark, dir)
+    val half = spark.createDataFrame(
+      part.filter("p_partkey % 2 = 0").collectAsList(), part.schema)
+    // the table as a single file, rewritten in place
+    assert(part.count() == 200)
+    rewriteFile(half, table)
+    assert(Tables.part(spark, dir).count() == 100)
+    // the table as a Spark output dir, rewritten in place
+    java.nio.file.Files.delete(table)
+    spark.read.parquet(s"${sf("sf0.001")}/part.parquet").write
+      .parquet(table.toString)
+    def staged(): Long =
+      Staged(spark, "part_rows_via_tables", dir)(Tables.part(spark, dir).count())
+    assert(Tables.part(spark, dir).count() == 200 && staged() == 200)
+    half.write.mode("overwrite").parquet(table.toString)
+    assert(staged() == 100)
+    assert(Tables.part(spark, dir).count() == 100)
+  }
+
+  test("bucketed tables are stagings: a new session builds its own " +
+      "copy under its staging root while the old frame keeps its rows; " +
+      "release deletes both; the warehouse is untouched") {
+    import graft.sources.Tables
+    val dir = sf("sf0.001")
+    val wh = new java.io.File(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    def warehouse = Option(wh.list()).map(_.toSet).getOrElse(Set.empty)
+    val before = warehouse
+    def orders(s: org.apache.spark.sql.SparkSession, group: String) = {
+      spark.sparkContext.setJobGroup(group, group)
+      try Tables.bucketed(s, dir, "orders", "o_orderkey", 16)
+      finally spark.sparkContext.clearJobGroup()
+    }
+    val (old, fresh) = (spark.newSession(), spark.newSession())
+    val o1 = orders(old, "bucketed-old")
+    val n = o1.count()
+    assert(n > 0 && (orders(old, "bucketed-old-2") eq o1))
+    val o2 = orders(fresh, "bucketed-fresh")
+    assert(Staged.builtBy("bucketed-fresh") ==
+      Set("bucketed_orders_o_orderkey_16"))
+    assert(Staged.builtBy("bucketed-old-2").isEmpty)
+    val (r1, r2) = (Staged.root(old), Staged.root(fresh))
+    val (f1, f2) = (o1.inputFiles.toSeq, o2.inputFiles.toSeq)
+    assert(f1.nonEmpty && f1.forall(_.contains(r1.getPath)), f1)
+    assert(f2.nonEmpty && f2.forall(_.contains(r2.getPath)), f2)
+    assert(o1.count() == n && o2.count() == n)
+    Staged.release(old)
+    Staged.release(fresh)
+    assert(!r1.exists() && !r2.exists())
+    assert((f1 ++ f2).forall(f => !new java.io.File(new java.net.URI(f)).exists()))
+    assert(warehouse == before, s"written under $wh")
   }
 
   test("bench floor artifact min-merges same-fingerprint runs, keeps " +

@@ -174,30 +174,21 @@ class PipelinesSpec extends SparkSpec {
     assert(StatusPoints.auditRows(pts).columns.toSeq ==
       Seq("host_name", "service_description", "friendlyname", "crownjewel"))
 
-    // K5 typed sink via foreachPartition collector
-    implicit val s = spark
-    val acc = spark.sparkContext.collectionAccumulator[String]("pts")
-    StatusPoints.sinkPoints(StatusPoints.typedPoints(pts)) { it =>
-      it.foreach(p => acc.add(s"${p.service_description}:${p.service_status}"))
-    }
-    assert(acc.value.size() == 4)
-
-    // K5 precondition (url...py:151-152): a missing target DB fails
-    // fast with a typed error and ZERO partition work
-    val wrote = spark.sparkContext.collectionAccumulator[String]("pre")
-    val e = intercept[StatusPoints.SinkPreconditionException] {
-      StatusPoints.sinkPoints(StatusPoints.typedPoints(pts), "metrics",
-        () => Set("telegraf", "internal")) { it =>
-        it.foreach(p => wrote.add(p.service_description))
-      }
-    }
-    assert(e.getMessage.contains("'metrics' does not exist"))
-    assert(wrote.value.size() == 0)
-    // present DB -> writes proceed
-    StatusPoints.sinkPoints(StatusPoints.typedPoints(pts), "metrics",
-      () => Set("metrics")) { it =>
-      it.foreach(p => wrote.add(p.service_description))
-    }
-    assert(wrote.value.size() == 4)
+    // K5 point sink: a graft-points file-mode write publishes every
+    // point once (endpoint mode and its requireDb precondition are in
+    // PointsSinkSpec)
+    val out = tempDir("graftk5")
+    pts.write.format("graft-points").mode("append")
+      .option("path", out.toString)
+      .option("measurement", "m1")
+      .option("tagCols", "host_name,service_description")
+      .option("fieldCols", "service_status_numeric")
+      .option("timeCol", "time")
+      .save()
+    import scala.jdk.CollectionConverters._
+    val lines = java.nio.file.Files.list(out).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".lp"))
+      .flatMap(java.nio.file.Files.readAllLines(_).asScala).toSeq
+    assert(lines.size == 4, lines)
   }
 }

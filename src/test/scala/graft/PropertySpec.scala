@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -12,6 +13,23 @@ import graft.operators.Relational
   */
 class PropertySpec extends SparkSpec {
   import spark.implicits._
+
+  /** The reference's row identity (`extract.py:119,127`,
+    * `json.dumps(sort_keys=True)`): a SHA-256 of the name-sorted
+    * columns' text, with a null sentinel (a bare `concat_ws` skips
+    * nulls). The dedups key on typed columns; J3 checks them against
+    * this text key.
+    */
+  private def canonicalRowKey(cols: Seq[String]): Column =
+    sha2(concat_ws("\u0001",
+      cols.sorted.map(c =>
+        coalesce(col(c).cast("string"), lit("\u0002NULL"))): _*), 256)
+
+  /** A frame's rows as sorted text; the text form keeps -0.0 apart
+    * from 0.0, as the row identity must.
+    */
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("|")).sorted
 
   test("F1: parseRound2 of numeric strings = 2dp round; never NaN") {
     val values = Gen.listOfN(300, Gen.chooseNum(-1e6, 1e6)).sample.get
@@ -69,15 +87,12 @@ class PropertySpec extends SparkSpec {
     import org.apache.spark.sql.DataFrame
     // the hash-keyed anti-join the typed key replaced, as the reference
     def hashed(cur: DataFrame, prev: DataFrame): DataFrame = {
-      val key = ScalarOps.canonicalRowKey(cur.columns.toSeq)
+      val key = canonicalRowKey(cur.columns.toSeq)
       cur.withColumn("__row_key", key)
         .join(prev.select(key.as("__row_key")), Seq("__row_key"),
           "left_anti")
         .drop("__row_key")
     }
-    // text form keeps -0.0 apart from 0.0, as the row identity must
-    def rows(df: DataFrame): Seq[String] = df.collect().toSeq
-      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
     val row = for {
       k <- Gen.option(Gen.chooseNum(0, 3))
       v <- Gen.option(Gen.oneOf("a", "b"))
@@ -109,6 +124,58 @@ class PropertySpec extends SparkSpec {
     val mapsPrev = maps.filter($"k" === 1)
     assert(rows(Relational.antiJoinDedup(maps, mapsPrev)) ==
       rows(hashed(maps, mapsPrev)))
+  }
+
+  test("J3 stream: typed-column stream dedup == the canonicalRowKey " +
+      "stream dedup (nulls, duplicate rows, NaN, signed zeros)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    // the hash-keyed stream dedup the typed key replaced
+    def hashed(in: DataFrame): DataFrame =
+      in.withColumn("__row_key", canonicalRowKey(in.columns.toSeq))
+        .withWatermark("ts", "2 hours")
+        .dropDuplicatesWithinWatermark("__row_key")
+        .drop("__row_key")
+    val t0 = java.sql.Timestamp.valueOf("2024-08-11 10:00:00")
+    val row = for {
+      k <- Gen.option(Gen.chooseNum(0, 3))
+      v <- Gen.option(Gen.oneOf("a", "b"))
+      d <- Gen.option(Gen.oneOf(0.0, -0.0, Double.NaN, 1.5))
+      f <- Gen.option(Gen.oneOf(0.0f, -0.0f, Float.NaN, 2.5f))
+      m <- Gen.chooseNum(0, 2)
+    } yield (k, v, d, f, new java.sql.Timestamp(t0.getTime + m * 60000L))
+    def sample(n: Int, seed: Long) = Gen.listOfN(n, row)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))
+    // fixtures keyed outside the random k domain
+    val (neg, nan) = ((Option(7), Option("a"), Option(-0.0), Option(1f), t0),
+      (Option(8), Option("b"), Option(Double.NaN), Option(Float.NaN), t0))
+    val first = sample(200, 1L) ++ Seq(neg, nan, nan)
+    // a re-fetch overlapping the first batch, the zero's other sign
+    val second = sample(100, 2L) ++ first.take(40) ++
+      Seq(neg.copy(_3 = Option(0.0)), nan)
+    def run(dedup: DataFrame => DataFrame): Seq[String] = {
+      val input = MemoryStream[(Option[Int], Option[String], Option[Double],
+        Option[Float], java.sql.Timestamp)]
+      val name = "j3_stream_" + java.util.UUID.randomUUID().toString
+        .replace("-", "")
+      val q = dedup(input.toDF().toDF("k", "v", "d", "f", "ts"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try Seq(first, second).foreach { b =>
+        input.addData(b)
+        q.processAllAvailable()
+      } finally q.stop()
+      rows(spark.table(name))
+    }
+    val got = run(graft.streaming.StreamingDedup.dedupedStream(_, "ts",
+      "2 hours"))
+    assert(got == run(hashed))
+    // -0.0 is not 0.0, NaN is NaN, and a re-fetched row is emitted once
+    assert(got.count(_.startsWith("7|a|")) == 2)
+    assert(got.count(_.startsWith("8|")) == 1)
+    val ids = (first ++ second).map(_.toString)
+    assert(got.size == ids.distinct.size && got.size < ids.size)
   }
 
   test("J3 plan: HostMetrics.dedupAgainst executes an anti-join with " +
@@ -285,16 +352,6 @@ class PropertySpec extends SparkSpec {
     docs.foreach { case (id, t) =>
       assert(out(id) == t, s"doc $id changed under no-op threshold")
     }
-  }
-
-  test("F11: canonical row key invariant under column permutation") {
-    val rows = Gen.listOfN(100,
-      Gen.zip(Gen.alphaStr, Gen.chooseNum(0, 1000))).sample.get
-    val k1 = rows.toDF("s", "n")
-      .select(ScalarOps.canonicalRowKey(Seq("s", "n"))).as[String].collect()
-    val k2 = rows.map(_.swap).toDF("n", "s")
-      .select(ScalarOps.canonicalRowKey(Seq("n", "s"))).as[String].collect()
-    assert(k1.toSeq == k2.toSeq)
   }
 
   test("PqSqDist: symmetric, zero on self, matches plain double L2 " +

@@ -113,12 +113,4 @@ class ScalarOpsSpec extends SparkSpec {
       "unknown")).as[String].head()
     assert(got == "second") // reference dict comprehension is last-wins
   }
-
-  test("F11 canonicalRowKey is column-order insensitive") {
-    val a = Seq((1, "x")).toDF("p", "q")
-      .select(ScalarOps.canonicalRowKey(Seq("p", "q"))).as[String].head()
-    val b = Seq(("x", 1)).toDF("q", "p")
-      .select(ScalarOps.canonicalRowKey(Seq("q", "p"))).as[String].head()
-    assert(a == b)
-  }
 }

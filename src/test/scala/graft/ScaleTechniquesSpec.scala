@@ -212,8 +212,10 @@ class ScaleTechniquesSpec extends SparkSpec {
         ($"id" * 2).as("total"))
       val items = s.range(3000).select(($"id" % 1000).as("k"),
         $"id".as("item"))
-      Relational.writeBucketed(orders, "graft_orders_b", Seq("k"), 8)
-      Relational.writeBucketed(items, "graft_items_b", Seq("k"), 8)
+      Relational.writeBucketed(orders, "graft_orders_b", Seq("k"), 8,
+        s"$wh/orders")
+      Relational.writeBucketed(items, "graft_items_b", Seq("k"), 8,
+        s"$wh/items")
       val joined = s.table("graft_orders_b")
         .join(s.table("graft_items_b"), Seq("k"))
       val plan = joined.queryExecution.executedPlan.toString
