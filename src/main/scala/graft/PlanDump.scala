@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.catalog.Catalog
 
 /** Optimization-round evidence tool: write `.explain("formatted")` for
   * the named declared queries to `<outDir>/<query>_<suffix>.txt` (the
@@ -17,19 +17,10 @@ object PlanDump {
     val Array(outDir, suffix, namesCsv) = args
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val all = Catalog.select(SparkEntry.queries ++ SparkEntry.benchOnly,
+      Some(names.toSeq))
+    val spark = Catalog.session()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val all = SparkEntry.queries ++ SparkEntry.benchOnly
-    val unknown = names.toSet.diff(all.keySet)
-    require(unknown.isEmpty, s"unknown queries: $unknown")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = all(name)(spark, sfDir)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.{DedupQueries, NagiosQueries}
+
 /** Scaling datapoint tool: no sf1 testdata ships with the harness, so
   * this replicates the sf0.1 FACT tables `factor`× (dimension tables
   * stay fixed — facts grow faster than dims in any real deployment)
@@ -251,7 +253,7 @@ object ScaleProbe {
       // axis the per-(host,service) connector fan-out exists to avoid)
       "metrics_etl_hosts" -> ((s: SparkSession, dir: String) => {
         val f = if (dir == scaleDir) factor else 1
-        SparkEntry.metricsEtl(s, dir, hosts = 25 * f)
+        NagiosQueries.metricsEtl(s, dir, hosts = 25 * f)
       }),
       // the committed cron-tick job end to end on the same hosts axis
       // (VERDICT r9 task 7): doc count grows with the corpus, each
@@ -260,7 +262,7 @@ object ScaleProbe {
       // append on top of metrics_etl_hosts' transform pipeline
       "etl_job_hosts" -> ((s: SparkSession, dir: String) => {
         val f = if (dir == scaleDir) factor else 1
-        SparkEntry.etlJobTick(s, dir, hosts = 25 * f)
+        NagiosQueries.etlJobTick(s, dir, hosts = 25 * f)
       }),
       // consolidate-then-fit: the documented production answer for a
       // Theil-Sen series past the pair cap, as a MEASURED row (r10).
@@ -348,7 +350,7 @@ object ScaleProbe {
         // the q_boilerplate corpus mangle, the ONE shared definition
         // (id shift is a multiple of 4, so each copy keeps the
         // every-4th promo line)
-        val corpus = SparkEntry.boilerMangle(rep)
+        val corpus = DedupQueries.boilerMangle(rep)
         graft.operators.Dedup.stripDomainBoilerplate(corpus, "doc_id",
           "source", "text", minDomainDocs = 5L, minFraction = 0.5)
       }),

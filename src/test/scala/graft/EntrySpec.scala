@@ -221,11 +221,36 @@ class EntrySpec extends SparkSpec {
         if (calls == 1) throw new IllegalStateException("boom")
         s.range(10).toDF()
       }))
-    val (results, failed) = Bench.timePasses(spark, benched, "sfX", 2)
+    val (results, failed, perPass) = Bench.timePasses(spark, benched, "sfX", 2)
     assert(failed == Set("flaky") && results("flaky") >= 0)
     Bench.writeFloor(results, "sfX", f.toString, failed = failed)
     assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(f),
       before))
+    // every pass is kept: null for the failed pass 1, a time for pass 2
+    val passes = f.resolveSibling("passes.json")
+    Bench.writePasses(perPass, passes.toString)
+    val flaky = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(passes.toFile).get("flaky")
+    assert(flaky.size() == 2 && flaky.get(0).isNull &&
+      flaky.get(1).isNumber && flaky.get(1).asDouble() == results("flaky"))
+  }
+
+  test("catalog assembly rejects a duplicated query name, naming it") {
+    import graft.catalog.{Catalog, Query}
+    def q(name: String) = Query(name, (s, _) => s.range(1).toDF(), "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      Catalog.assemble(Seq(q("q_once"), q("q_twice")), Seq(q("q_twice"))))
+    assert(e.getMessage.contains("q_twice") &&
+      !e.getMessage.contains("q_once"), e.getMessage)
+  }
+
+  test("Verify rejects an unknown query name, naming it, before it " +
+      "runs or writes anything") {
+    val out = tempDir("graftverify").resolve("out")
+    val e = intercept[IllegalArgumentException](
+      Verify.main(Array(sf("sf0.001"), out.toString, "q1_agg,q1_agg_typo")))
+    assert(e.getMessage.contains("q1_agg_typo"), e.getMessage)
+    assert(!java.nio.file.Files.exists(out))
   }
 
   test("benchOnly is disjoint from queries and never oracled") {

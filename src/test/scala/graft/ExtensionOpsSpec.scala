@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.catalog.TextQueries
 import graft.functions.VectorExpressions
 import graft.operators.{Dedup, Multimodal, Similarity, TextOps}
 
@@ -1336,14 +1337,14 @@ class ExtensionOpsSpec extends SparkSpec {
         concat(split(col("word"), ""),
           array(lit("</w>"))).as("s"))
       .localCheckpoint(true)
-    SparkEntry.bpeMerges.foreach { case (a, b) =>
+    TextQueries.bpeMerges.foreach { case (a, b) =>
       ref = ref.select(col("word"),
         TextOps.applyBpeMerge(col("s"), a, b).as("s")).localCheckpoint(true)
     }
     val refMap = ref.as[(String, Seq[String])].collect().toMap
     val fused = vocab.select(col("word"),
         graft.functions.TextExpressions.bpeEncode(col("word"),
-          SparkEntry.bpeMerges).as("s"))
+          TextQueries.bpeMerges).as("s"))
       .as[(String, Seq[String])].collect().toMap
     assert(fused == refMap)
     // the learned merges COMPRESS: common corpus words encode to
@@ -2262,7 +2263,7 @@ class ExtensionOpsSpec extends SparkSpec {
     assert(got.view.mapValues(_._1).toMap == hof)
     // real corpus: the frozen table actually fires somewhere
     val n = TextOps.mergePhrases(docs, "doc_id", "text",
-        SparkEntry.phraseTable)
+        TextQueries.phraseTable)
       .agg(sum($"n_merged")).as[Long].head()
     assert(n > 0L)
   }

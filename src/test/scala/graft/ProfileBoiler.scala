@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.DedupQueries
+
 /** Measured attribution for the r14 `boilerplate_full` scale row
   * (VERDICT r13 task 5): after the axis grew its 1× corpus 4× (so the
   * denominator measures scaling work, not session fixed cost), the
@@ -39,7 +41,7 @@ object ProfileBoiler {
           (col("doc_id") + lit(i.toLong * 100000000L)).as("doc_id"),
           col("source"), col("text")))
         .reduce(_ unionByName _)
-      SparkEntry.boilerMangle(rep) // the ONE shared mangle definition
+      DedupQueries.boilerMangle(rep) // the ONE shared mangle definition
     }
     def wall(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

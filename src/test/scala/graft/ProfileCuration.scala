@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.catalog.TextQueries
+
 /** Splits q_curation_v5's wall time into (a) logical construction,
   * (b) analysis+optimization+physical planning (executedPlan force),
   * (c) execution via the noop sink — to test whether the ~2.5k-line
@@ -67,7 +69,7 @@ object ProfileCuration {
       val selW = broadcast(sel.select(col("doc_id"), col("weight")))
       TextOps.mergePhrases(
           docs.join(selW, "doc_id"), "doc_id", "text",
-          SparkEntry.phraseTable)
+          TextQueries.phraseTable)
         .join(selW, "doc_id")
         .select(col("doc_id"), col("weight"), col("text_merged"),
           col("n_merged"))

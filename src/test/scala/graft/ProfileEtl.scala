@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.catalog.NagiosQueries
+
 /** Scratch decomposition of etl_job_hosts (round 10): times the cron
   * tick's internal stages at 1x and 10x to attribute the first
   * measured 6.65 ratio. Lives in the TEST source set so it never
@@ -35,7 +37,7 @@ object ProfileEtl {
     }
     for ((dir, hosts) <- targets; pass <- 1 to 2) {
       System.err.println(s"--- $dir hosts=$hosts pass $pass ---")
-      val inDir = t("stage input (once)")(SparkEntry.etlJobInput(spark, dir, hosts))
+      val inDir = t("stage input (once)")(NagiosQueries.etlJobInput(spark, dir, hosts))
       val batch = t("json_read+count") {
         val b = spark.read.schema(jobs.NagiosEtlJob.inputSchema).json(inDir)
         System.err.println(s"[etl]   docs=${b.count()}")

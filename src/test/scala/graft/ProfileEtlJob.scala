@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.NagiosQueries
+
 /** Stage decomposition for q_etl_job (VERDICT r15 task 6): one
   * committed AvailableNow tick = stream machinery + flatten/melt/dedup
   * compute + partitioned parquet append + result re-read. Times the
@@ -31,14 +33,14 @@ object ProfileEtlJob {
       r
     }
     // warm the tick once; it stages the input the passes below read
-    SparkEntry.etlJobTick(spark, dir, hosts)
+    NagiosQueries.etlJobTick(spark, dir, hosts)
       .write.mode("overwrite").format("noop").save()
-    val inDir = SparkEntry.etlJobInput(spark, dir, hosts)
+    val inDir = NagiosQueries.etlJobInput(spark, dir, hosts)
 
     for (pass <- 1 to 3) {
       System.err.println(s"--- pass $pass ---")
       t("full tick (bench shape)") {
-        SparkEntry.etlJobTick(spark, dir, hosts)
+        NagiosQueries.etlJobTick(spark, dir, hosts)
           .write.mode("overwrite").format("noop").save()
       }
       val batch = spark.read.schema(jobs.NagiosEtlJob.inputSchema)

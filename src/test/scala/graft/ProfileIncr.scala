@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.DedupQueries
+
 /** Scratch decomposition of q_minhash_incremental (round 8, VERDICT
   * task 3): times the probe's internal jobs separately to attribute
   * the r6→r7 flat-bench movement (1.34 s → 2.27 s).
@@ -33,7 +35,7 @@ object ProfileIncr {
           concat(col("text"), lit(" near dup suffix")).as("text"))
       // the staged read (includes the session's one-time staging in pass 1)
       val staged = t("staged_read") {
-        val d = SparkEntry.stagedHistoryBands(spark, dir)
+        val d = DedupQueries.stagedHistoryBands(spark, dir)
         d.count(); d
       }
       t("scheme_check") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scratch stage profiler for q_metrics_etl's 10x attribution (round
-  * 8, VERDICT item 1). Mirrors SparkEntry.metricsEtl stage by stage
+  * 8, VERDICT item 1). Mirrors NagiosQueries.metricsEtl stage by stage
   * and times each prefix at 1x and 10x so the superlinear stage is
   * named by measurement, not argument. Not part of the bench surface.
   */
