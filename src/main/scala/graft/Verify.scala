@@ -18,12 +18,17 @@ object Verify {
       only)
     val spark = Catalog.session()
     new java.io.File(outDir).mkdirs()
+    // each query runs as its own job group behind a stderr marker, so
+    // a Spark log line (a stage warning, say) can be placed between
+    // two markers and its jobs carry the query's name
     run.foreach { case (name, fn) =>
+      System.err.println(s"[verify] $name")
+      spark.sparkContext.setJobGroup(name, name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      } finally spark.sparkContext.clearJobGroup()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -611,7 +611,7 @@ class PropertySpec extends SparkSpec {
     import graft.streaming.StreamingDedup.sortableTie
     val rnd = new scala.util.Random(8L)
     def check[A](dt: DataType, vs: Seq[A])(cmp: (A, A) => Int): Unit = {
-      val enc = sortableTie(dt)
+      val enc = sortableTie("rateStream", dt)
       val native = vs.sortWith((a, b) => cmp(a, b) < 0)
       val encoded = vs.sortBy(v => enc(v.asInstanceOf[Any]))
       // encodings must be order-ISOMORPHIC: equal iff equal, and the

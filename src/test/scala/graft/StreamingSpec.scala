@@ -357,6 +357,87 @@ class StreamingSpec extends SparkSpec {
     assert(got.contains(("h1", 15.0, 7.0, 0.0, true)))
   }
 
+  test("cusumStream: a replay of the last consumed (ts, tiebreak) " +
+      "position is dropped; the same ts with a larger tiebreak is consumed") {
+    import graft.operators.TimeSeries
+    implicit val sq = spark.sqlContext
+    def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
+    // target 10, slack 2, no alarm: S+ climbs 1 -> 4 and would reach 7
+    // if the replayed 15.0 were folded a second time
+    val a = ("h1", t(0), 1L, 13.0)
+    val b = ("h1", t(1), 2L, 15.0)
+    val c = ("h1", t(1), 3L, 12.0)
+    val in = MemoryStream[(String, java.sql.Timestamp, Long, Double)]
+    val got = scala.collection.mutable.ArrayBuffer[
+      (Long, (String, Double, Double, Double, Boolean))]()
+    val q = StreamingDedup.cusumStream(
+        in.toDF().toDF("host", "ts", "event_id", "value"),
+        Seq("host"), "ts", "value", "event_id",
+        target = 10.0, slack = 2.0, threshold = 100.0)
+      .writeStream.outputMode("append")
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        got ++= df.select($"host", $"value", $"cusum_pos", $"cusum_neg",
+            $"alarm")
+          .as[(String, Double, Double, Double, Boolean)].collect()
+          .map(id -> _)
+        ()
+      }.start()
+    try {
+      in.addData(a, b); q.processAllAvailable()
+      // b again (equal position) and the same ts with a smaller
+      // tiebreak: both dropped; c (same ts, larger tiebreak): consumed
+      in.addData(b, ("h1", t(1), 1L, 99.0), c); q.processAllAvailable()
+    } finally q.stop()
+    val batchIds = got.map(_._1).distinct.sorted
+    assert(batchIds.size == 2, s"$got")
+    assert(got.filter(_._1 == batchIds(1)).map(_._2) ==
+      Seq(("h1", 12.0, 4.0, 0.0, false)), s"$got")
+    val batch = TimeSeries.cusum(
+        Seq(a, b, c).toDF("host", "ts", "event_id", "value"),
+        Seq("host"), Seq("ts", "event_id"), "value",
+        target = 10.0, slack = 2.0, threshold = 100.0)
+      .select($"host", $"value", $"cusum_pos", $"cusum_neg", $"alarm")
+      .as[(String, Double, Double, Double, Boolean)].collect()
+    assert(got.map(_._2).sortBy(r => (r._3, r._2)) ==
+      batch.toSeq.sortBy(r => (r._3, r._2)),
+      s"streaming $got vs batch ${batch.toSeq}")
+  }
+
+  test("event-time twins refuse a non-timestamp event time and an " +
+      "unsupported tiebreak at construction, naming the twin") {
+    implicit val sq = spark.sqlContext
+    val in = MemoryStream[(String, java.sql.Timestamp, String, Long,
+      Seq[Int], Double, String)]
+    val df = in.toDF()
+      .toDF("host", "ts", "ts_s", "tie", "bad_tie", "value", "state")
+    val hosts = Seq("host")
+    val twins: Seq[(String, (String, String) => Any)] = Seq(
+      "cusumStream" -> ((ts, tie) => StreamingDedup.cusumStream(
+        df, hosts, ts, "value", tie, 10.0, 2.0, 5.0)),
+      "holtStream" -> ((ts, tie) => StreamingDedup.holtStream(
+        df, hosts, ts, "value", tie, 0.25, 0.5)),
+      "holtWintersStream" -> ((ts, tie) => StreamingDedup.holtWintersStream(
+        df, hosts, ts, "value", tie, 0.25, 0.5, 0.5, 4)),
+      "hardSoftStateStream" -> ((ts, tie) =>
+        StreamingDedup.hardSoftStateStream(df, hosts, "state", ts, tie, "OK")),
+      "notificationStream" -> ((ts, tie) =>
+        StreamingDedup.notificationStream(df, hosts, "state", ts, tie, "OK")),
+      "flapDetectionStream" -> ((ts, tie) =>
+        StreamingDedup.flapDetectionStream(df, hosts, "state", ts, tie)),
+      "rateStream" -> ((ts, tie) => StreamingDedup.rateStream(
+        df, hosts, ts, "value", tie)))
+    twins.foreach { case (name, build) =>
+      build("ts", "tie") // the valid form constructs
+      Seq(("ts_s", "tie", "event-time column 'ts_s'"),
+          ("ts", "bad_tie", "unsupported tiebreak type array<int>"))
+        .foreach { case (ts, tie, what) =>
+          val e = intercept[IllegalArgumentException](build(ts, tie))
+          assert(e.getMessage.startsWith(s"$name: ") &&
+            e.getMessage.contains(what), s"$name($ts, $tie): ${e.getMessage}")
+        }
+    }
+  }
+
   test("holtStream: cross-batch level/trend recursion == batch holt " +
       "bit-for-bit; late row dropped; non-exact complement refused") {
     import graft.operators.TimeSeries
