@@ -32,9 +32,11 @@ object ScalarOps {
   /** F2 — epoch seconds → `'yyyy-MM-dd HH:mm:ss'` string
     * (`extract.py:64-67`). The reference uses naive local time; the
     * engine pins the session to UTC so the mapping is deterministic.
+    * Null outside years 0001–9999 UTC; far-out epochs overflow otherwise.
     */
   def epochToDatetime2(c: Column): Column =
-    date_format(timestamp_seconds(c), "yyyy-MM-dd HH:mm:ss")
+    when(c.between(-62135596800L, 253402300799L),
+      date_format(timestamp_seconds(c), "yyyy-MM-dd HH:mm:ss"))
 
   /** F3 — datetime string → epoch seconds, null on parse failure
     * (`url_service_status_InfluxDB_insert.py:102`). Inverse of F2.

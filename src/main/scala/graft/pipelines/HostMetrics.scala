@@ -13,7 +13,7 @@ import graft.operators.Relational
   * `load_to_db.py`) collapsed into one declarative DAG: lineage replaces
   * the intermediate files, partition parallelism replaces the
   * ThreadPoolExecutor, and the only shuffle in the whole plan is the
-  * anti-join dedup stage.
+  * anti-join dedup stage; each point's values are parsed once.
   *
   * Scale: at 100 TB the fetch fan-out table is repartitioned to cluster
   * width; per-family pivots are narrow `select`s (no shuffle); dedup
@@ -54,13 +54,22 @@ object HostMetrics {
     val scalar = regexp_replace(col("point.v"), "^\"|\"$", "")
     // try_cast, not cast: ANSI mode would crash the job on one garbage
     // timestamp, while the DSv2 reader emits null for unparseable t —
-    // null epoch flows to a null timestamp and is dropped by the
-    // completeness gate, keeping both ingestion paths consistent.
+    // a null or out-of-range epoch gives a null timestamp (F2), which
+    // the completeness gate drops on both ingestion paths.
     parsed.select(
       col("host_name"), col("service_name"),
       col("point.t").try_cast("long").as("epoch"),
       coalesce(asArray, array(scalar)).as("values"))
   }
+
+  /** Per point: `host_name`, the F2 `timestamp`, `service_name` and
+    * the first `width` value positions parsed (F8 + F1) as `__v1…`. */
+  private def parsedPoints(points: DataFrame, width: Int): DataFrame =
+    points.select(Seq(col("host_name"),
+        ScalarOps.epochToDatetime2(col("epoch")).as("timestamp"),
+        col("service_name")) ++
+      ScalarOps.zipToColumns(col("values"),
+        (1 to width).map(i => s"__v$i")): _*)
 
   /** F8 + F1 + F2 + P3 for one metric family: positional zip of the
     * value array onto the registry's column names, 2-dp parse-or-null,
@@ -69,50 +78,40 @@ object HostMetrics {
     */
   def familyFrame(points: DataFrame, service: String): DataFrame = {
     val keys = NagiosModel.serviceKeys(service)
-    val cols: Seq[Column] =
-      Seq(col("host_name"),
-        ScalarOps.epochToDatetime2(col("epoch")).as("timestamp"),
-        col("service_name")) ++
-      ScalarOps.zipToColumns(col("values"), keys)
-    Relational.completenessGate(
-      points.filter(col("service_name") === service).select(cols: _*))
+    Relational.completenessGate(parsedPoints(points.filter(
+        col("service_name") === service), keys.size)
+      .toDF(Seq("host_name", "timestamp", "service_name") ++ keys: _*))
   }
 
   /** The union "long" payload over the given families:
     * (host_name, timestamp, service_name, metric_name, value) — the
     * engine's single-relation equivalent of the reference's
-    * heterogeneous JSON payload (`extract.py:153-156`). Built by
-    * melting each family frame; `unionByName` keeps it one plan.
+    * heterogeneous JSON payload (`extract.py:153-156`).
     *
     * Pass `services` when the ingest batch carries a known family
-    * subset: every listed family adds its melt/gate expressions to the
-    * fused per-row kernel (cheap, but still dead weight for families
-    * the batch cannot contain).
+    * subset: every listed family adds a gate and melt branch to the
+    * Generate (cheap, but dead weight for families it cannot contain).
     */
   def longPayload(points: DataFrame,
       services: Seq[String] = NagiosModel.services): DataFrame = {
-    // One fused pass instead of one filtered branch per family: each
-    // family branch re-ran the full upstream (JSON parse + explode)
-    // just to keep its own service's rows, so a 2-family batch paid
-    // the parse twice. Per row, exactly one family's `when` matches;
-    // its completeness gate (identity cols + every zipped value
-    // non-null — parseRound2 already folds NaN to null) and its melt
-    // are evaluated in-line, and exploding the empty/null
-    // concatenation drops gated and unlisted rows. `concat` (not a
-    // single case-chain) keeps exact union parity even for a
-    // duplicated services entry. `posexplode_outer` + position filter,
-    // NOT `explode`: InferFiltersFromGenerate only fires on outer =
-    // false and would duplicate the whole melt kernel into an inferred
-    // size()>0 filter (the Dedup.explodeBandsOnce trap, measured 12x
-    // there); outer-explode of an empty/null array yields one padded
-    // row with a null position, which the filter drops — row-identical
-    // to the inner explode for every input.
-    val tsCol = ScalarOps.epochToDatetime2(col("epoch"))
-    val rowOk = col("host_name").isNotNull && tsCol.isNotNull
-    val entryType = "array<struct<metric_name:string,value:double>>"
+    // Timestamp and values are parsed once per point in `parsedPoints`
+    // below the Generate, whose branches only read `__v1…__vW`: the
+    // Generate shares no subexpression, and parsing in each branch's
+    // gate and melt cost 180 try_casts per point against W = 5 here.
+    //
+    // Per row one family's `when` matches (gate: every value non-null;
+    // parseRound2 folds NaN to null); the empty/null concatenation of
+    // the rest explodes to nothing. `concat`, not a case-chain, keeps
+    // union parity for a duplicated services entry. `posexplode_outer`
+    // + position filter, NOT `explode`: InferFiltersFromGenerate fires
+    // only on outer = false and would copy the melt into an inferred
+    // size()>0 filter (the Dedup.explodeBandsOnce trap, 12x there);
+    // the padded row of an empty/null array has a null position.
+    val width = services.map(NagiosModel.serviceKeys(_).size).max
+    val rowOk = col("host_name").isNotNull && col("timestamp").isNotNull
     val perService: Seq[Column] = services.map { svc =>
       val keys = NagiosModel.serviceKeys(svc)
-      val vals = ScalarOps.zipToColumns(col("values"), keys)
+      val vals = keys.indices.map(i => col(s"__v${i + 1}"))
       val gate = vals.map(_.isNotNull).reduce(_ && _)
       val entries = keys.zip(vals).map { case (k, v) =>
         struct(lit(k).as("metric_name"), v.as("value"))
@@ -120,11 +119,10 @@ object HostMetrics {
       coalesce(
         when(col("service_name") === svc && rowOk && gate,
           array(entries: _*)),
-        array().cast(entryType))
+        array().cast("array<struct<metric_name:string,value:double>>"))
     }
-    points
-      .select(col("host_name"), tsCol.as("timestamp"),
-        col("service_name"),
+    parsedPoints(points, width)
+      .select(col("host_name"), col("timestamp"), col("service_name"),
         posexplode_outer(concat(perService: _*)).as(Seq("__pos", "m")))
       .filter(col("__pos").isNotNull)
       .select(col("host_name"), col("timestamp"), col("service_name"),

@@ -305,7 +305,7 @@ object StreamingDedup {
     * order-sensitive recursion never rewrites history (route
     * disordered streams through [[rateStream]]-style watermark
     * buffering upstream, or re-run the batch fold). Rows with a null
-    * key, ts or `required` column are dropped at entry.
+    * key, ts, tiebreak or `required` column are dropped at entry.
     *
     * `step` maps (state, row, first row of the entity) to the new state
     * and the values to emit after the keys and the row's ts, if any;
@@ -322,7 +322,7 @@ object StreamingDedup {
     val tsIdx = schema.fieldIndex(tsCol)
     val tieIdx = schema.fieldIndex(tieBreakCol)
     val tieKey = sortableTie(twin, schema(tieIdx).dataType)
-    keyedFold(twin, stream, keyCols, tsCol +: required,
+    keyedFold(twin, stream, keyCols, tsCol +: tieBreakCol +: required,
         Encoders.tuple(stateEnc,
           Encoders.tuple(Encoders.scalaLong, Encoders.STRING)),
         keyed(schema, keyCols, schema(tsIdx) +: outFields: _*)) {
@@ -734,7 +734,7 @@ object StreamingDedup {
     val timeoutConf =
       if (lateness.isDefined) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    keyedFold(twin, watermarked, keyCols, Seq(tsCol, valueCol),
+    keyedFold(twin, watermarked, keyCols, Seq(tsCol, valueCol, tieBreakCol),
         Encoders.row(stateSchema),
         keyed(schema, keyCols, schema(tsIdx),
           StructField("value", DoubleType),

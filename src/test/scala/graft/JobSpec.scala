@@ -72,6 +72,28 @@ class JobSpec extends SparkSpec {
       s"$out/data/metric_family=cpu/load_date=$today").isDirectory)
   }
 
+  test("an out-of-range epoch is gated, not fatal: the tick commits " +
+      "and every other row lands") {
+    val base = tempDir("graftjobe").toString
+    val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
+    val services = Seq("CPU Usage", "Swap Usage")
+    def sink() = spark.read.parquet(s"$out/data")
+    // "99999999999999999" is a valid long, but no timestamp: it would
+    // overflow the epoch → microseconds conversion
+    val farBody = """{"data":{"row":[""" +
+      """{"t":"99999999999999999","v":"50.00"},""" +
+      """{"t":"1700000300","v":"43.00"}]}}"""
+    land(in, ("h1", "CPU Usage", farBody), ("h1", "Swap Usage", swapBody))
+    NagiosEtlJob.runOnce(spark, in, out, ckpt, services)
+    assert(sink().count() == 4, sink().collect().mkString("\n"))
+    assert(sink().filter($"metric_name" === "percent_used")
+      .select("value").as[Double].collect().toSeq == Seq(43.0))
+    assert(!new java.io.File(s"$out/quarantine").exists())
+    // the batch committed: the next tick has nothing to replay
+    NagiosEtlJob.runOnce(spark, in, out, ckpt, services)
+    assert(sink().count() == 4)
+  }
+
   test("dedup window is bounded: rows older than the horizon no " +
       "longer suppress a re-delivery; a wider horizon does") {
     val base = tempDir("graftjobw").toString

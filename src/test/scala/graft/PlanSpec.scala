@@ -698,6 +698,29 @@ class PlanSpec extends SparkSpec {
       s"eval overlap should be a broadcast semi-join:\n$plan")
   }
 
+  test("longPayload parses each value position once, below the " +
+      "Generate; the Generate holds no Cast") {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import org.apache.spark.sql.types.DoubleType
+    import graft.model.NagiosModel
+    val s = spark
+    import s.implicits._
+    val points = Seq(("h1", "CPU Usage", 1700000000L, Seq("1.00")))
+      .toDF("host_name", "service_name", "epoch", "values").repartition(2)
+    val plan = graft.pipelines.HostMetrics.longPayload(points)
+      .queryExecution.optimizedPlan
+    val gens = plan.collect { case g: Generate => g }
+    assert(gens.size == 1, plan)
+    assert(gens.head.generator.collect { case c: Cast => c }.isEmpty, plan)
+    val parses = gens.head.child.collect { case n => n.expressions }
+      .flatten.flatMap(_.collect {
+        case c: Cast if c.dataType == DoubleType => c.canonicalized })
+      .distinct
+    assert(parses.size == NagiosModel.serviceKeys.values.map(_.size).max,
+      plan)
+  }
+
   test("whole-stage codegen covers the scalar pipeline") {
     val df = SparkEntry.queries("q_doc_stats")(spark, dir)
     val plan = physical(df)

@@ -199,6 +199,79 @@ class PropertySpec extends SparkSpec {
       .exists(_.exists(_.isInstanceOf[Sha2])), plan)
   }
 
+  test("§3.1 longPayload parse-once == the per-family parse (bad " +
+      "values, short/long/null arrays, null host and epoch, out-of-range " +
+      "epoch, unlisted, subset and duplicated services)") {
+    import org.apache.spark.sql.DataFrame
+    import graft.model.NagiosModel
+    // the melt as it was before the parse moved below the Generate:
+    // every family branch zips and parses the values itself
+    def perFamily(points: DataFrame, services: Seq[String]): DataFrame = {
+      val tsCol = ScalarOps.epochToDatetime2(col("epoch"))
+      val rowOk = col("host_name").isNotNull && tsCol.isNotNull
+      val entryType = "array<struct<metric_name:string,value:double>>"
+      val perService = services.map { svc =>
+        val keys = NagiosModel.serviceKeys(svc)
+        val vals = ScalarOps.zipToColumns(col("values"), keys)
+        val gate = vals.map(_.isNotNull).reduce(_ && _)
+        val entries = keys.zip(vals).map { case (k, v) =>
+          struct(lit(k).as("metric_name"), v.as("value"))
+        }
+        coalesce(
+          when(col("service_name") === svc && rowOk && gate,
+            array(entries: _*)),
+          array().cast(entryType))
+      }
+      points
+        .select(col("host_name"), tsCol.as("timestamp"),
+          col("service_name"),
+          posexplode_outer(concat(perService: _*)).as(Seq("__pos", "m")))
+        .filter(col("__pos").isNotNull)
+        .select(col("host_name"), col("timestamp"), col("service_name"),
+          col("m.metric_name"), col("m.value"))
+    }
+    val value = Gen.frequency(
+      8 -> Gen.chooseNum(-1e4, 1e4).map(v => Option(f"$v%.3f")),
+      1 -> Gen.oneOf("NaN", "", "garbage", "1.2.3", "2.675", "-0")
+        .map(Option(_)),
+      1 -> Gen.const(Option.empty[String]))
+    val point = for {
+      host <- Gen.frequency(9 -> Gen.oneOf("h1", "h2").map(Option(_)),
+        1 -> Gen.const(Option.empty[String]))
+      svc <- Gen.oneOf(NagiosModel.services :+ "Unlisted Usage")
+      epoch <- Gen.frequency(
+        8 -> Gen.chooseNum(0L, 2000000000L).map(Option(_)),
+        1 -> Gen.const(Option.empty[Long]),
+        1 -> Gen.oneOf(99999999999999999L, -99999999999999999L,
+          253402300800L).map(Option(_)))
+      values <- Gen.frequency(
+        9 -> Gen.chooseNum(0, 7).flatMap(Gen.listOfN(_, value))
+          .map(Option(_)),
+        1 -> Gen.const(Option.empty[List[Option[String]]]))
+    } yield (host, svc, epoch, values)
+    val ok = Option(List(Option("1.00"), Option("2.00"), Option("3.00")))
+    val fixtures = Seq(
+      (Option("h1"), "Swap Usage", Option(1700000000L), ok), // exact
+      (Option("h1"), "CPU Usage", Option(1700000000L), ok), // over-long
+      (Option("h1"), "Memory Usage", Option(1700000000L), ok), // short
+      (Option("h1"), "Swap Usage", Option(99999999999999999L), ok),
+      (Option("h1"), "Swap Usage", Option.empty[Long], ok),
+      (Option.empty[String], "Swap Usage", Option(1700000000L), ok),
+      (Option("h1"), "Unlisted Usage", Option(1700000000L), ok),
+      (Option("h1"), "CPU Usage", Option(1700000000L),
+        Option.empty[List[Option[String]]]))
+    val sample = Gen.listOfN(600, point)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(10L))
+    val points = (sample ++ fixtures)
+      .toDF("host_name", "service_name", "epoch", "values").repartition(3)
+    Seq(NagiosModel.services, Seq("CPU Usage", "Swap Usage"),
+        Seq("Memory Usage", "CPU Usage", "Memory Usage")).foreach { svcs =>
+      val got = rows(graft.pipelines.HostMetrics.longPayload(points, svcs))
+      assert(got == rows(perFamily(points, svcs)), svcs)
+      assert(got.nonEmpty, svcs)
+    }
+  }
+
   test("as-of join == driver-side per-probe scan on random data") {
     // random probes/builds over few keys with heavy ts collisions —
     // the regime where the tagged-union window form could mis-order

@@ -41,6 +41,15 @@ class ScalarOpsSpec extends SparkSpec {
     assert(got(1)._1 == "2024-08-11 19:00:00")
   }
 
+  test("F2 is null outside years 0001-9999 instead of overflowing") {
+    val epochs = Seq(-62135596800L, 253402300799L, -62135596801L,
+      253402300800L, 99999999999999999L, Long.MinValue)
+    val got = epochs.map(Option(_)).toDF("e")
+      .select(ScalarOps.epochToDatetime2($"e")).as[Option[String]].collect()
+    assert(got.toSeq == Seq(Some("0001-01-01 00:00:00"),
+      Some("9999-12-31 23:59:59"), None, None, None, None))
+  }
+
   test("F4/F5 status maps: bijection on 0-3, defaults outside") {
     val got = Seq("0", "1", "2", "3", "7", null).toDF("c")
       .select(ScalarOps.statusText($"c").as("t"))

@@ -403,6 +403,46 @@ class StreamingSpec extends SparkSpec {
       s"streaming $got vs batch ${batch.toSeq}")
   }
 
+  test("cusumStream: a row with a null tiebreak is dropped at entry; " +
+      "the query keeps running and matches the batch fold") {
+    import graft.operators.TimeSeries
+    implicit val sq = spark.sqlContext
+    def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
+    val a = ("h1", t(0), Option(1L), 13.0)
+    val bad = ("h1", t(1), Option.empty[Long], 50.0)
+    val b = ("h1", t(2), Option(2L), 15.0)
+    val c = ("h1", t(3), Option(3L), 9.0)
+    val in = MemoryStream[(String, java.sql.Timestamp, Option[Long], Double)]
+    val got = scala.collection.mutable.ArrayBuffer[
+      (String, Double, Double, Double, Boolean)]()
+    val q = StreamingDedup.cusumStream(
+        in.toDF().toDF("host", "ts", "event_id", "value"),
+        Seq("host"), "ts", "value", "event_id",
+        target = 10.0, slack = 2.0, threshold = 100.0)
+      .writeStream.outputMode("append")
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        got ++= df.select($"host", $"value", $"cusum_pos", $"cusum_neg",
+            $"alarm")
+          .as[(String, Double, Double, Double, Boolean)].collect()
+        ()
+      }.start()
+    try {
+      in.addData(a, bad); q.processAllAvailable()
+      in.addData(b, c); q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty, s"${q.exception}")
+    } finally q.stop()
+    val batch = TimeSeries.cusum(
+        Seq(a, b, c).toDF("host", "ts", "event_id", "value"),
+        Seq("host"), Seq("ts", "event_id"), "value",
+        target = 10.0, slack = 2.0, threshold = 100.0)
+      .select($"host", $"value", $"cusum_pos", $"cusum_neg", $"alarm")
+      .as[(String, Double, Double, Double, Boolean)].collect()
+    assert(got.sortBy(r => (r._3, r._2)) ==
+      batch.toSeq.sortBy(r => (r._3, r._2)),
+      s"streaming $got vs batch ${batch.toSeq}")
+    assert(got.size == 3 && !got.exists(_._2 == 50.0), s"$got")
+  }
+
   test("event-time twins refuse a non-timestamp event time and an " +
       "unsupported tiebreak at construction, naming the twin") {
     implicit val sq = spark.sqlContext
