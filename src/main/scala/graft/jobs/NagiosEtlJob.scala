@@ -44,10 +44,10 @@ import graft.sources.Sinks
   *
   * Scale posture: one cron tick at 100 TB fleet size is a bounded
   * file listing (only unconsumed files), a map-side flatten/melt, one
-  * null-safe anti-join on the typed columns against the horizon
-  * partitions (broadcast while the horizon fits the threshold, a
-  * shuffled join on the same keys past it; no row hash, since a 64-byte
-  * hex key is no narrower than the row), and a (family,
+  * anti-join against the horizon partitions, keyed on a 64-bit row
+  * hash with the typed columns compared null-safe in the residual
+  * (broadcast while the horizon fits the threshold, a shuffled join on
+  * the same key past it), and a (family,
   * load_date)-partitioned append — the same plan SURVEY §3.1 argues
   * for, wrapped in the orchestration the reference runs with.
   */

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * Scale notes (100 TB, 1000 executors):
   *  - membership/enrichment joins keep the small side broadcastable; the
   *    big fact side never shuffles for them.
-  *  - the cross-run anti-join dedup joins on the typed columns
-  *    themselves: its horizon side is broadcast at tick scale, and a
-  *    hash key would be no narrower than the row it stands for.
+  *  - the cross-run anti-join dedup joins on one 64-bit hash of the
+  *    row and checks the typed columns themselves in the residual: its
+  *    horizon side is broadcast at tick scale as a long-keyed relation.
   *  - latest-per-key avoids a global sort: it is a hash repartition by
   *    key + per-partition sort (window), fully parallel.
   */
@@ -55,40 +55,52 @@ object Relational {
     * Every copy of a matched current row is dropped, as the reference's
     * set-membership filter does.
     *
-    * The key is the typed columns themselves under null-safe equality
-    * (`<=>`), so null matches null and the join stays exact — no hash
-    * collision can drop a new row. Spark's join normalizes `-0.0` to
-    * `0.0` (and every NaN to one NaN); the reference's `json.dumps`
-    * keeps the zeros apart, so each top-level float/double column adds
-    * a key that is the value's text on zeros only; a column Spark
-    * cannot compare (a map) is compared by its text. The previous side's
-    * columns are renamed first, since `previous` is often derived from
-    * `current`.
+    * The only join key is `xxhash64` of the row, which picks a bucket;
+    * identity is the typed columns, compared in the residual under
+    * null-safe equality (`<=>`), so null matches null and the join
+    * stays exact: a hash collision costs one residual check and never
+    * drops a new row. The hash agrees with that equality: it gives
+    * `-0.0` and `0.0` (top level or nested) one value, and every NaN
+    * one value, as `<=>` does. The reference's `json.dumps` keeps the
+    * zeros apart, so each top-level float/double column also compares
+    * the value's text on zeros only; a column Spark cannot compare (a
+    * map) is hashed and compared by its text. `previous` carries
+    * `current`'s columns at the same types, since a value's hash
+    * depends on its type. The previous side's columns are renamed
+    * first, since `previous` is often derived from `current`.
     *
-    * No row hash: a 256-bit key as hex is 64 bytes, no narrower than
-    * the Nagios row it replaces, and building it for every row on both
-    * sides was most of each tick's dedup time. At tick scale the
-    * horizon side is under the broadcast threshold, so nothing
-    * shuffles; a horizon past the threshold plans a shuffled join on
-    * the same typed keys.
+    * One long key lets the build side be a `LongHashedRelation`, which
+    * the driver builds and broadcasts faster than a relation keyed on
+    * the columns (two keys per null-safe column, stored beside each
+    * row). At tick scale the horizon side is under the broadcast
+    * threshold, so nothing shuffles; a horizon past the threshold
+    * plans a shuffled join on the same long key.
     */
   def antiJoinDedup(current: DataFrame, previous: DataFrame): DataFrame = {
     val prevName = (c: String) => s"__prev_$c"
     val prev = previous.select(
       current.columns.toSeq.map(c => col(c).as(prevName(c))): _*)
-    val same = current.schema.fields.toSeq.map { f =>
+    // `<=>` under `least`: a bare `<=>`, or any form the optimizer
+    // rewrites to `=` once it knows both sides non-null, would be
+    // pulled out as more join keys
+    def same(x: Column, y: Column) = least(x <=> y, lit(true))
+    val (keys, checks) = current.schema.fields.toSeq.map { f =>
       val (c, p) = (current(f.name), prev(prevName(f.name)))
       f.dataType match {
         case DoubleType | FloatType =>
           def zero(x: Column) = when(x === 0, x.cast("string"))
-          (c <=> p) && (zero(c) <=> zero(p))
+          ((c, p), same(c, p) && same(zero(c), zero(p)))
         // maps have no equality in Spark; compare their text
         case t if !RowOrdering.isOrderable(t) =>
-          c.cast("string") <=> p.cast("string")
-        case _ => c <=> p
+          val (ct, pt) = (c.cast("string"), p.cast("string"))
+          ((ct, pt), same(ct, pt))
+        case _ => ((c, p), same(c, p))
       }
-    }
-    current.join(prev, same.reduce(_ && _), "left_anti")
+    }.unzip
+    val (cs, ps) = keys.unzip
+    current.join(prev,
+      xxhash64(cs: _*) === xxhash64(ps: _*) && checks.reduce(_ && _),
+      "left_anti")
   }
 
   /** J4 — cross-product fan-out: every host × every registered service

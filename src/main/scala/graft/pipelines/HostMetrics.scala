@@ -17,10 +17,10 @@ import graft.operators.Relational
   *
   * Scale: at 100 TB the fetch fan-out table is repartitioned to cluster
   * width; per-family pivots are narrow `select`s (no shuffle); dedup
-  * is a null-safe anti-join on the payload's typed columns, broadcast
-  * while the previous side fits the threshold and a shuffled join on
-  * the same keys past it (a row hash would be no narrower than the
-  * 5-column row); the family routing is a single `partitionBy` write,
+  * is an anti-join keyed on one 64-bit row hash with the payload's
+  * typed columns compared null-safe in the residual, broadcast while
+  * the previous side fits the threshold and a shuffled join on the
+  * same key past it; the family routing is a single `partitionBy` write,
   * not 4 scans (`load_to_db.py:34-48` does 4 passes over the payload).
   */
 object HostMetrics {

@@ -35,11 +35,11 @@ object StreamingDedup {
   /** Watermarked cross-batch dedup over a streaming frame: rows that
     * re-arrive within `horizon` of the max seen event time (the
     * reference's 1 h overlap re-fetch) are emitted once. The dedup key
-    * is the full row identity: the typed columns themselves, as the
-    * batch anti-join (`Relational.antiJoinDedup`) keys it, so no row
-    * hash is built. The state store compares keys by their binary
-    * form, so null matches null, `-0.0` stays apart from `0.0` and NaN
-    * matches NaN, as the reference's `json.dumps` row text does.
+    * is the full row identity: the stream keys its state on the typed
+    * columns themselves, so no row hash is built. The state store
+    * compares keys by their binary form, so null matches null, `-0.0`
+    * stays apart from `0.0` and NaN matches NaN, as the reference's
+    * `json.dumps` row text does.
     */
   def dedupedStream(stream: DataFrame, tsCol: String, horizon: String)
       : DataFrame =

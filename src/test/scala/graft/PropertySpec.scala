@@ -17,7 +17,7 @@ class PropertySpec extends SparkSpec {
   /** The reference's row identity (`extract.py:119,127`,
     * `json.dumps(sort_keys=True)`): a SHA-256 of the name-sorted
     * columns' text, with a null sentinel (a bare `concat_ws` skips
-    * nulls). The dedups key on typed columns; J3 checks them against
+    * nulls). The dedups compare typed columns; J3 checks them against
     * this text key.
     */
   private def canonicalRowKey(cols: Seq[String]): Column =
@@ -126,6 +126,85 @@ class PropertySpec extends SparkSpec {
       rows(hashed(maps, mapsPrev)))
   }
 
+  test("J3: hash-keyed anti-join == the typed-key anti-join (hash " +
+      "collisions, nested signed zeros and NaN, timestamp and map " +
+      "columns, all-null rows, self-derived previous)") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
+    import org.apache.spark.sql.types._
+    // the anti-join as it was before the hash key: every column a
+    // null-safe join key
+    def typedKeys(current: DataFrame, previous: DataFrame): DataFrame = {
+      val prevName = (c: String) => s"__prev_$c"
+      val prev = previous.select(
+        current.columns.toSeq.map(c => col(c).as(prevName(c))): _*)
+      val same = current.schema.fields.toSeq.map { f =>
+        val (c, p) = (current(f.name), prev(prevName(f.name)))
+        f.dataType match {
+          case DoubleType | FloatType =>
+            def zero(x: Column) = when(x === 0, x.cast("string"))
+            (c <=> p) && (zero(c) <=> zero(p))
+          // maps have no equality in Spark; compare their text
+          case t if !RowOrdering.isOrderable(t) =>
+            c.cast("string") <=> p.cast("string")
+          case _ => c <=> p
+        }
+      }
+      current.join(prev, same.reduce(_ && _), "left_anti")
+    }
+    val schema = StructType(Seq(
+      StructField("a", StringType), StructField("b", StringType),
+      StructField("d", DoubleType),
+      StructField("arr", ArrayType(DoubleType)),
+      StructField("st", StructType(Seq(StructField("x", DoubleType),
+        StructField("y", FloatType)))),
+      StructField("ts", TimestampType),
+      StructField("m", MapType(StringType, IntegerType))))
+    val t0 = java.sql.Timestamp.valueOf("2024-08-11 10:00:00")
+    def orNull[T](g: Gen[T]): Gen[Any] =
+      Gen.frequency[Any](4 -> g, 1 -> Gen.const(null))
+    val dbl = Gen.oneOf(0.0, -0.0, Double.NaN, 1.5)
+    val row = for {
+      a <- orNull(Gen.oneOf("a", "b"))
+      b <- orNull(Gen.oneOf("a", "b"))
+      d <- orNull(dbl)
+      arr <- orNull(Gen.chooseNum(0, 2).flatMap(Gen.listOfN(_, orNull(dbl))))
+      st <- orNull(Gen.zip(orNull(dbl), orNull(Gen.oneOf(0.0f, -0.0f,
+        Float.NaN))).map { case (x, y) => Row(x, y) })
+      ts <- orNull(Gen.oneOf(t0, new java.sql.Timestamp(t0.getTime + 1000)))
+      m <- orNull(Gen.oneOf(Map("k" -> 1), Map("k" -> 2), Map.empty))
+    } yield Row(a, b, d, arr, st, ts, m)
+    def sample(n: Int, seed: Long) = Gen.listOfN(n, row)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))
+    def frame(rs: Seq[Row]) = spark.createDataFrame(
+      java.util.Arrays.asList(rs: _*), schema).repartition(3)
+    def nulls(a: Any, b: Any) = Row(a, b, null, null, null, null, null)
+    // ("a", null) and (null, "a") hash the same, as nulls leave the
+    // hash unchanged; the residual keeps them apart
+    val (an, na, bn, nb) =
+      (nulls("a", null), nulls(null, "a"), nulls("b", null), nulls(null, "b"))
+    val allNull = nulls(null, null)
+    val curRows = sample(300, 3L) ++ Seq(an, nb, allNull, allNull)
+    val prevRows = sample(120, 4L) ++ curRows.take(50) ++ Seq(na, bn, allNull)
+    val (current, previous) = (frame(curRows), frame(prevRows))
+    val hashes = frame(Seq(an, na)).select(xxhash64(
+      schema.fieldNames.toSeq.map(c =>
+        if (c == "m") col(c).cast("string") else col(c)): _*))
+      .as[Long].collect()
+    assert(hashes.distinct.length == 1, hashes.toSeq)
+    val got = rows(Relational.antiJoinDedup(current, previous))
+    assert(got == rows(typedKeys(current, previous)))
+    // both colliding rows survive, every all-null copy goes
+    assert(got.contains("a|null|null|null|null|null|null") &&
+      got.contains("null|b|null|null|null|null|null"), got)
+    assert(!got.contains("null|null|null|null|null|null|null"), got)
+    assert(got.size < curRows.size)
+    // previous derived from current (a self-join)
+    val derived = current.filter($"a".isNull || $"d" === 0)
+    assert(rows(Relational.antiJoinDedup(current, derived)) ==
+      rows(typedKeys(current, derived)))
+  }
+
   test("J3 stream: typed-column stream dedup == the canonicalRowKey " +
       "stream dedup (nulls, duplicate rows, NaN, signed zeros)") {
     import org.apache.spark.sql.DataFrame
@@ -180,21 +259,35 @@ class PropertySpec extends SparkSpec {
 
   test("J3 plan: HostMetrics.dedupAgainst executes an anti-join with " +
       "no Sha2 row key") {
+    // and on one long hash key, with every column checked in the
+    // residual; no column is a literal, since the optimizer folds a
+    // constant column's check away
     import org.apache.spark.sql.catalyst.expressions.Sha2
     import org.apache.spark.sql.catalyst.plans.LeftAnti
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.types.LongType
     val payload = spark.range(200).select(
       concat(lit("h"), $"id" % 7).as("host_name"), $"id".as("timestamp"),
-      lit("CPU Usage").as("service_name"), lit("load").as("metric_name"),
+      when($"id" % 2 === 0, "CPU Usage").otherwise("Swap Usage")
+        .as("service_name"),
+      concat(lit("m"), $"id" % 3).as("metric_name"),
       ($"id" / 4).as("value"))
     val out = graft.pipelines.HostMetrics.dedupAgainst(payload,
       payload.filter($"timestamp" % 3 === 0))
     assert(out.count() == 133)
     val plan = out.queryExecution.executedPlan
     val helper = new AdaptiveSparkPlanHelper {}
-    assert(helper.collect(plan) {
-      case j: BaseJoinExec if j.joinType == LeftAnti => j }.nonEmpty, plan)
+    val joins = helper.collect(plan) {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j }
+    assert(joins.size == 1, plan)
+    val join = joins.head
+    assert(join.leftKeys.map(_.dataType) == Seq(LongType) &&
+      join.rightKeys.map(_.dataType) == Seq(LongType), plan)
+    val checked = join.condition.toSeq.flatMap(_.references.map(_.name)).toSet
+    payload.columns.foreach { c =>
+      assert(checked(c) && checked(s"__prev_$c"), s"$c unchecked: $plan")
+    }
     assert(!helper.collect(plan) { case p => p }.flatMap(_.expressions)
       .exists(_.exists(_.isInstanceOf[Sha2])), plan)
   }
